@@ -3,7 +3,7 @@
     spark-submit --py-files pdf_parser_spark.zip jobs/curate.py \
         --input  /data/documents.parquet \
         --outdir /data/curated \
-        [--resume] [--no-near-dups] [--snapshots] [--cpus 32]
+        [--resume] [--no-near-dups] [--cpus 32]
 
 The standard pre-training data hygiene pass, end to end:
 
@@ -22,21 +22,20 @@ The standard pre-training data hygiene pass, end to end:
       signature store — historical text is
       never re-read; the store self-bootstraps
       and self-heals from the curated table     (state ∝ docs, tiny)
-    → append curated rows to <outdir>/curated   (the checkpoint)
-    → append survivor (url, fp, signature) to
+    → commit quarantined (url, reason) rows to
+      <outdir>/quarantine                       (every drop, audited)
+    → commit curated rows to <outdir>/curated   (the checkpoint)
+    → commit survivor (url, fp, signature) to
       <outdir>/fingerprints                     (the dedup state)
     → stage-funnel metrics JSON                 (counts + drop rates)
 
-Same checkpoint/resume contract as jobs/extract.py: the curated table
-IS the checkpoint, `--resume` anti-joins its url set, idempotent per
-url. Quality thresholds are Gopher defaults; drops are counted per
+Same checkpoint/resume contract as jobs/extract.py: every table is a
+snapshot table (sinks/snapshots.py), each run is one atomic,
+time-travelable commit per table, and `--resume` anti-joins the
+CURRENT snapshots of curated AND quarantine — idempotent per url. A
+corrupt manifest ABORTS the resume instead of silently re-running the
+funnel. Quality thresholds are Gopher defaults; drops are counted per
 stage so a threshold change shows up in the funnel, never silently.
-
-`--snapshots` commits the curated AND quarantine tables through the
-snapshot-manifest layer (sinks/snapshots.py): each run is one atomic,
-time-travelable commit per table, resume anti-joins the CURRENT
-snapshots' url sets, and a corrupt manifest ABORTS the resume instead
-of silently re-running the funnel (the jobs/extract.py contract).
 """
 
 from __future__ import annotations
@@ -54,26 +53,13 @@ from pyspark.sql import functions as F  # noqa: E402
 from pdf_parser_spark.operators import dedup as dd  # noqa: E402
 from pdf_parser_spark.operators import webtext_filters as wf  # noqa: E402
 from pdf_parser_spark.plans.session import get_spark  # noqa: E402
+from pdf_parser_spark.sinks import snapshots as sn  # noqa: E402
 from pdf_parser_spark.sources.corpus import read_documents  # noqa: E402
 
 MAX_DUP_LINE_FRAC = 0.3
 
 
-def _read_or_none(spark, path: str, snapshots: bool):
-    """Current table state, or None if nothing committed yet. Missing
-    table → None in both layouts; a CORRUPT snapshot manifest raises
-    (resume must abort, not silently re-adjudicate + re-append)."""
-    if snapshots:
-        from pdf_parser_spark.sinks import snapshots as sn
-
-        try:
-            return sn.read(spark, path)
-        except FileNotFoundError:
-            return None
-    return spark.read.parquet(path) if Path(path).exists() else None
-
-
-def _heal_store(spark, store_path: str, cur_tbl, store_tbl, snapshots: bool):
+def _heal_store(spark, store_path: str, cur_tbl, store_tbl):
     """Make the fingerprint store catch up to the curated table.
 
     The store is appended AFTER the curated commit, so a crash in the
@@ -92,27 +78,21 @@ def _heal_store(spark, store_path: str, cur_tbl, store_tbl, snapshots: bool):
     if n_missing == 0:
         return store_tbl, 0
     healed = dd.doc_signatures(missing, text_col="text", key_col="url")
-    _append_store(spark, healed, store_path, snapshots)
-    # re-read rather than union: the append invalidated/extended the
-    # path, and unioning the pre-append read on top of a re-listed
-    # scan would double the healed rows
-    return _read_or_none(spark, store_path, snapshots), n_missing
+    _append_store(spark, healed, store_path)
+    # re-read rather than union: the commit added a batch, and the
+    # current snapshot is the store the dedup must join against
+    return sn.read_or_none(spark, store_path), n_missing
 
 
-def _append_store(spark, sigs, store_path: str, snapshots: bool) -> int:
+def _append_store(spark, sigs, store_path: str) -> int:
     rows = sigs.select("url", "fp", "signature")
     n = rows.count()
     if n == 0:
         return 0
-    if snapshots:
-        from pdf_parser_spark.sinks import snapshots as sn
-
-        sn.commit(
-            spark, rows, store_path,
-            summary={"job": "curate", "table": "fingerprints"},
-        )
-    else:
-        rows.write.mode("append").parquet(store_path)
+    sn.commit(
+        spark, rows, store_path,
+        summary={"job": "curate", "table": "fingerprints"},
+    )
     return n
 
 
@@ -124,15 +104,20 @@ def run(
     near_dups: bool = True,
     near_dup_threshold: float = 0.8,
     quarantine: bool = True,
-    snapshots: bool = False,
     input_format: str = "parquet",
     transitive_near_dups: bool = False,
     history_dedup: bool = False,
     drop_noindex: bool = False,
     host_cap: int | None = None,
+    *,
+    snapshots: bool = True,
 ) -> dict:
     from pdf_parser_spark.fsutil import ensure_local_path
 
+    # kept only so existing snapshots=True callers still work; there
+    # is no plain-parquet layout left to select
+    if not snapshots:
+        raise ValueError("curate writes snapshot tables only; snapshots=False is not supported")
     ensure_local_path(outdir, "jobs/curate.py")
     spark = spark or get_spark(app_name="curate")
     # every persisted frame is released even when a write fails
@@ -142,7 +127,7 @@ def run(
     try:
         return _run(
             input_path, outdir, spark, resume, near_dups,
-            near_dup_threshold, quarantine, caches, snapshots, input_format,
+            near_dup_threshold, quarantine, caches, input_format,
             transitive_near_dups, history_dedup, drop_noindex, host_cap,
         )
     finally:
@@ -162,7 +147,6 @@ def _run(
     near_dup_threshold: float,
     quarantine: bool,
     caches: list,
-    snapshots: bool = False,
     input_format: str = "parquet",
     transitive_near_dups: bool = False,
     history_dedup: bool = False,
@@ -214,7 +198,7 @@ def _run(
         # re-runs the full funnel on previously-dropped docs and
         # re-appends duplicate (url, reason) quarantine rows
         seen = None
-        cur_tbl = _read_or_none(spark, curated_path, snapshots)
+        cur_tbl = sn.read_or_none(spark, curated_path)
         if cur_tbl is not None:
             done = cur_tbl.select("url").distinct()
             already = done.count()
@@ -223,20 +207,18 @@ def _run(
         # flag: resuming with quarantine=False must still skip docs an
         # earlier run already adjudicated, or a curated doc's dedup
         # twin re-enters the funnel alone and survives
-        q_tbl = _read_or_none(spark, quarantine_path, snapshots)
+        q_tbl = sn.read_or_none(spark, quarantine_path)
         if q_tbl is not None:
             q_seen = q_tbl.select("url")
             seen = q_seen if seen is None else seen.unionByName(q_seen)
         if seen is not None:
-            # localCheckpoint cuts the parquet-path lineage: this run
-            # APPENDS to the curated/quarantine dirs below, and a write
-            # to a path invalidates every cached plan that references
-            # it — without the checkpoint, each post-write action
-            # (store append, late metrics) silently re-evaluates the
-            # anti-join against the re-listed dirs, which now contain
-            # this very batch, and the whole funnel re-derives as
-            # EMPTY. Checkpoint cost is one materialization of the
-            # url set — data the anti-join was about to shuffle anyway.
+            # localCheckpoint pins the url set this run adjudicates
+            # against to what the tables held when it started: a
+            # post-commit action (store append, late metrics) that
+            # re-evaluates the funnel can never see this very batch
+            # in it and re-derive the funnel as EMPTY. Checkpoint cost
+            # is one materialization of the url set — data the
+            # anti-join was about to shuffle anyway.
             seen = seen.distinct().localCheckpoint()
             docs = docs.join(seen, on="url", how="left_anti")
 
@@ -319,10 +301,14 @@ def _run(
     # estimate (operators/dedup.near_dups_vs_history).
     # --- per-host cap (host-spam guard) -------------------------------
     # Applied AFTER within-batch dedup (a host's near-dup copies must
-    # not consume its budget) and BEFORE history dedup (capped-out
-    # docs are dropped either way — skipping the history join for
-    # them is free accuracy-neutral work avoided; they never enter
-    # the fingerprint store because they are not curated).
+    # not consume its budget) and BEFORE history dedup. That order is
+    # NOT accuracy-neutral: the cap picks its N keepers before history
+    # dedup runs, so keepers that then turn out to be history twins
+    # leave the host with fewer than N curated docs while capped-out
+    # docs that were not twins stay dropped (under-fill). Capped-out
+    # urls are quarantined (reason host_cap), and resume anti-joins
+    # the quarantine, so they are never re-adjudicated — the
+    # under-fill is permanent on resume.
     n_host_capped = 0
     cap_losers = None
     if host_cap is not None:
@@ -345,8 +331,8 @@ def _run(
     if history_dedup:
         new_sigs = dd.doc_signatures(survivors, text_col="text", key_col="url").persist()
         caches.append(new_sigs)
-        hist = _read_or_none(spark, store_path, snapshots)
-        cur_tbl = _read_or_none(spark, curated_path, snapshots)
+        hist = sn.read_or_none(spark, store_path)
+        cur_tbl = sn.read_or_none(spark, curated_path)
         if cur_tbl is not None:
             if hist is None:
                 # store enabled mid-life: build it from the curated
@@ -354,12 +340,12 @@ def _run(
                 boot = dd.doc_signatures(
                     cur_tbl.select("url", "text"), text_col="text", key_col="url"
                 )
-                _append_store(spark, boot, store_path, snapshots)
-                hist = _read_or_none(spark, store_path, snapshots)
+                _append_store(spark, boot, store_path)
+                hist = sn.read_or_none(spark, store_path)
                 healed = -1  # marker: full bootstrap, not a crash heal
             else:
                 hist, healed = _heal_store(
-                    spark, store_path, cur_tbl.select("url", "text"), hist, snapshots
+                    spark, store_path, cur_tbl.select("url", "text"), hist
                 )
         if hist is not None:
             hist = hist.select("url", "fp", "signature")
@@ -435,29 +421,17 @@ def _run(
             q_all = q_all.unionByName(
                 hist_near_hits.select("url", F.lit("near_dup_history").alias("reason"))
             )
-        if snapshots:
-            from pdf_parser_spark.sinks import snapshots as sn
-
-            sn.commit(
-                spark, q_all, quarantine_path,
-                summary={"job": "curate", "table": "quarantine", "resume": resume},
-            )
-        else:
-            q_all.write.mode("append").parquet(quarantine_path)
+        sn.commit(
+            spark, q_all, quarantine_path,
+            summary={"job": "curate", "table": "quarantine", "resume": resume},
+        )
         t = _mark("quarantine_write", t)
 
-    snap = None
-    if snapshots:
-        from pdf_parser_spark.sinks import snapshots as sn
-
-        snap = sn.commit(
-            spark, survivors, curated_path,
-            summary={"job": "curate", "table": "curated", "resume": resume},
-        )
-        cur_all = sn.read(spark, curated_path)
-    else:
-        survivors.write.mode("append").parquet(curated_path)
-        cur_all = spark.read.parquet(curated_path)
+    snap = sn.commit(
+        spark, survivors, curated_path,
+        summary={"job": "curate", "table": "curated", "resume": resume},
+    )
+    cur_all = sn.read(spark, curated_path)
     t = _mark("curated_write", t)
     n_curated = cur_all.select("url").distinct().count()
 
@@ -467,7 +441,7 @@ def _run(
         # after the curated commit, so a crash here under-drops later
         # batches at worst; _heal_store repairs it on the next run.
         final_sigs = new_sigs.join(survivor_urls, on="url", how="left_semi")
-        n_appended = _append_store(spark, final_sigs, store_path, snapshots)
+        n_appended = _append_store(spark, final_sigs, store_path)
         t = _mark("fingerprint_store", t)
 
     n_new = funnel["n_new"] or 0
@@ -504,9 +478,8 @@ def _run(
         "total_curated": n_curated,
         "wall_sec": round(time.perf_counter() - t0, 2),
         "stage_secs": stage_secs,
+        "snapshot_id": snap["snapshot_id"],
     }
-    if snap is not None:
-        metrics["snapshot_id"] = snap["snapshot_id"]
     out.mkdir(parents=True, exist_ok=True)
     (out / "curation_metrics.json").write_text(json.dumps(metrics, indent=2))
     return metrics
@@ -526,7 +499,6 @@ def main() -> None:
         "keep one canonical doc per cluster, instead of the pairwise "
         "id_b loser-drop",
     )
-    ap.add_argument("--snapshots", action="store_true")
     ap.add_argument("--input-format", choices=("parquet", "warc"), default="parquet")
     ap.add_argument(
         "--history-dedup",
@@ -565,7 +537,6 @@ def main() -> None:
                 resume=args.resume,
                 near_dups=args.near_dups,
                 near_dup_threshold=args.near_dup_threshold,
-                snapshots=args.snapshots,
                 input_format=args.input_format,
                 transitive_near_dups=args.transitive_near_dups,
                 history_dedup=args.history_dedup,

@@ -27,6 +27,16 @@ import json
 import sys
 
 
+def _read_table(spark, path: str):
+    """A job output (snapshot table: its current snapshot only) or a
+    plain parquet path written by one of the table commands."""
+    from .sinks import snapshots as sn
+
+    if "://" not in path and sn.current_snapshot(path) is not None:
+        return sn.read(spark, path)
+    return spark.read.parquet(path)
+
+
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(prog="pdf_parser_spark", description=__doc__)
     ap.add_argument("command", choices=[
@@ -82,8 +92,8 @@ def main(argv: list[str] | None = None) -> None:
         from .operators.validate_dist import validate_distributed
 
         v = validate_distributed(
-            spark.read.parquet(args.toc),
-            spark.read.parquet(args.chunks),
+            _read_table(spark, args.toc),
+            _read_table(spark, args.chunks),
             fuzzy_threshold=args.fuzzy_threshold,
             prefer_section_id=args.prefer_section_id,
         )
@@ -92,8 +102,10 @@ def main(argv: list[str] | None = None) -> None:
     elif args.command == "report":
         from .sinks.reports import final_report, write_report_json
 
-        validation = spark.read.parquet(f"{args.outdir}/validation")
-        metrics = spark.read.parquet(f"{args.outdir}/doc_metrics")
+        from .sinks import snapshots as sn
+
+        validation = sn.read(spark, f"{args.outdir}/validation")
+        metrics = sn.read(spark, f"{args.outdir}/doc_metrics")
         report = final_report(
             validation.where("toc_section_count is not null"),
             metrics.where("total_sections is not null"),

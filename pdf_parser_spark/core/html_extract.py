@@ -156,9 +156,29 @@ def segment_blocks(html: str | bytes | None) -> list[Block]:
 
 
 # <meta charset=utf-8> and the legacy
-# <meta http-equiv=Content-Type content="text/html; charset=...">
-# both reduce to a charset= token inside a meta tag
-_CHARSET_RX = re.compile(rb"(?is)<meta[^>]*charset\s*=\s*[\"']?\s*([a-z0-9_\-:.]+)")
+# <meta http-equiv=Content-Type content="text/html; charset=...">:
+# a charset ATTRIBUTE, or a charset= token inside the content value of
+# an http-equiv=content-type meta — never a charset= that merely
+# appears inside some other attribute's value (WHATWG prescan)
+_META_RX = re.compile(rb"(?is)<meta\b([^>]*)")
+_ATTR_RX = re.compile(rb"""([^\s"'>/=]+)(?:\s*=\s*("[^"]*"|'[^']*'|[^\s"'>]*))?""")
+_CHARSET_RX = re.compile(rb"(?i)charset\s*=\s*[\"']?\s*([a-z0-9_\-:.]+)")
+
+
+def _declared_charset(head: bytes) -> bytes | None:
+    for meta in _META_RX.finditer(head):
+        attrs: dict[bytes, bytes] = {}
+        for m in _ATTR_RX.finditer(meta.group(1)):
+            attrs.setdefault(m.group(1).lower(), (m.group(2) or b"").strip(b"\"'"))
+        if b"charset" in attrs:
+            m = _CHARSET_RX.match(b"charset=" + attrs[b"charset"])
+        elif attrs.get(b"http-equiv", b"").lower() == b"content-type":
+            m = _CHARSET_RX.search(attrs.get(b"content", b""))
+        else:
+            continue
+        if m:
+            return m.group(1)
+    return None
 
 
 def sniff_charset(head: bytes) -> str | None:
@@ -170,9 +190,9 @@ def sniff_charset(head: bytes) -> str | None:
         return "utf-8-sig"
     if head.startswith(b"\xff\xfe") or head.startswith(b"\xfe\xff"):
         return "utf-16"  # BOM-aware: picks the right endianness itself
-    m = _CHARSET_RX.search(head)
-    if m:
-        name = m.group(1).decode("ascii", errors="replace")
+    declared = _declared_charset(head)
+    if declared:
+        name = declared.decode("ascii", errors="replace")
         try:
             codecs.lookup(name)
         except LookupError:
@@ -230,6 +250,11 @@ class _MetadataParser(HTMLParser):
 
     def handle_starttag(self, tag: str, attrs) -> None:
         tag = tag.lower()
+        if self._in_title:
+            # <title> holds text only: a start tag means it was never
+            # closed, so the title stops here instead of swallowing
+            # the rest of the page
+            self.handle_endtag("title")
         a = {(k or "").lower(): ("" if v is None else v) for k, v in attrs}
         if tag == "html" and a.get("lang"):
             self.meta.setdefault("lang", a["lang"].strip())

@@ -75,11 +75,12 @@ def extract_document(
         result["toc"] = toc_records
 
         # chunk stage re-loads the ToC through the validator cleaner
-        # (run.py:139-152) and drops rows inside the ToC page range
+        # (run.py:139-152) and drops rows inside the ToC page range;
+        # validation below re-loads the same records the same way
+        # (orchestrate.py:395-422), so the cleaned list is built once
         skip_pages = set(range(rng[0], rng[1] + 1)) if rng else set()
-        toc_loaded = matching.load_toc_records(toc_records)
-        if rng:
-            toc_loaded = [e for e in toc_loaded if e["page"] > rng[1]]
+        toc_cleaned = matching.load_toc_records(toc_records)
+        toc_loaded = [e for e in toc_cleaned if e["page"] > rng[1]] if rng else toc_cleaned
 
         if toc_loaded:
             chunks = chunking.build_chunks_from_toc(doc_pages, toc_loaded, skip_pages=skip_pages)
@@ -90,10 +91,9 @@ def extract_document(
         if not rng:
             result["status"] = "no_toc"
 
-        # validation + metrics re-load both sinks exactly like the
-        # report path (orchestrate.py:395-422): cleaned ToC vs coerced
-        # export records
-        toc_for_val = matching.load_toc_records(toc_records)
+        # validation + metrics compare the cleaned ToC with the coerced
+        # export records, exactly like the report path
+        toc_for_val = toc_cleaned
         chunks_for_val = [matching.coerce_chunk_record(r) for r in exports]
         result["validation"] = matching.validation_report(
             toc_for_val,

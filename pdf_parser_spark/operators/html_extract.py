@@ -215,8 +215,10 @@ def boilerplate_stats(blocks: DataFrame) -> DataFrame:
     )
 
 
-# anchor href value: quoted either way or bare-unquoted
-_HREF_RX = "(?i)<a\\b[^>]*\\bhref\\s*=\\s*(\"[^\"]*\"|'[^']*'|[^\\s>]+)"
+# anchor href value: quoted either way or bare-unquoted. The name
+# must start after whitespace, a quote or a slash, so a
+# hyphen-prefixed decoy attribute (data-href) is never read as href
+_HREF_RX = "(?i)<a\\b[^>]*(?<=[\\s\"'/])href\\s*=\\s*(\"[^\"]*\"|'[^']*'|[^\\s>]+)"
 
 
 def html_outlinks(docs: DataFrame, html_col: str = "html", url_col: str = "url") -> DataFrame:

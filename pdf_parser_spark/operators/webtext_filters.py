@@ -240,13 +240,21 @@ def canonicalize_url(url: Column) -> Column:
 
 
 # a robots meta tag asking not to index: name/content in either
-# attribute order, either quoting, directive list containing the
-# word noindex or the none shorthand (= noindex,nofollow)
-_ROBOTS_VAL = "(\"[^\"]*\\b(?:noindex|none)\\b[^\"]*\"|'[^']*\\b(?:noindex|none)\\b[^']*')"
-_ROBOTS_NAME = "(\"robots\"|'robots'|robots)"
+# attribute order, double-, single- or un-quoted, directive list
+# containing the word noindex or the none shorthand (= noindex,
+# nofollow). An attribute name must start after whitespace, a quote
+# or a slash, so a hyphen-prefixed decoy (data-name, data-content)
+# never matches; an unquoted value ends at whitespace or '>', so
+# name=robotsXYZ is not robots.
+_ROBOTS_VAL = (
+    "(\"[^\"]*\\b(?:noindex|none)\\b[^\"]*\"|'[^']*\\b(?:noindex|none)\\b[^']*'"
+    "|(?![\"'])[^\\s>]*\\b(?:noindex|none)\\b[^\\s>]*)"
+)
+_ROBOTS_NAME = "(\"robots\"|'robots'|robots(?=[\\s>]))"
+_ATTR = "(?<=[\\s\"'/])"
 _ROBOTS_NOINDEX_RX = (
-    f"(?is)<meta\\b(?:[^>]*\\bname\\s*=\\s*{_ROBOTS_NAME}[^>]*\\bcontent\\s*=\\s*{_ROBOTS_VAL}"
-    f"|[^>]*\\bcontent\\s*=\\s*{_ROBOTS_VAL}[^>]*\\bname\\s*=\\s*{_ROBOTS_NAME})"
+    f"(?is)<meta\\b(?:[^>]*{_ATTR}name\\s*=\\s*{_ROBOTS_NAME}[^>]*{_ATTR}content\\s*=\\s*{_ROBOTS_VAL}"
+    f"|[^>]*{_ATTR}content\\s*=\\s*{_ROBOTS_VAL}[^>]*{_ATTR}name\\s*=\\s*{_ROBOTS_NAME})"
 )
 
 

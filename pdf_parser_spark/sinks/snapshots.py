@@ -10,6 +10,8 @@ dataflow:
 
   <table>/
     data/<uuid>/part-*.parquet     one directory per committed batch
+                                   (hive-style <col>=<v>/ subdirs
+                                   under a partition spec)
     _snapshots/v<N>.json           manifest: batch dirs, row counts,
                                    parent snapshot, operation, summary
 
@@ -21,6 +23,10 @@ dataflow:
                                 -> DataFrame AT a snapshot (time
                                    travel; default = current)
   snapshots(table)              -> the log, oldest→newest
+  read_or_none(spark, table)    -> current DataFrame, or None for a
+                                   table with no commits yet
+  committed_batch_ids(table)    -> batch ids the current snapshot holds
+                                   (the jobs' per-batch idempotence key)
   rollback(table, snapshot_id)  -> new snapshot whose file set is the
                                    old one (history is never erased —
                                    the Iceberg rollback contract)
@@ -32,14 +38,18 @@ pruning work unchanged). Writers append new directories only: no
 read-modify-write of data, so commits from a resumed job are
 idempotent at the batch level. Reference anchor: this replaces the
 reference's overwrite-in-place outputs (orchestrate.py) with an
-audit-able append log; jobs/extract.py's anti-join resume composes
-with it (resume reads the CURRENT snapshot's url set).
+audit-able append log. Every table the jobs/ scripts write is a
+snapshot table, so this is their one commit and crash protocol:
+resume anti-joins the CURRENT snapshot's url set, and a crash
+between two tables' commits is repaired from the batch ids each
+table's head manifest holds.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
 from pathlib import Path
 
@@ -111,12 +121,45 @@ def current_snapshot(table: str) -> dict | None:
     return log[-1] if log else None
 
 
+def _refuse_plain_parquet(table: str) -> None:
+    """A directory with parquet files but no `_snapshots/` log is a
+    plain-parquet table from an older layout: treating it as empty
+    would re-derive everything and mix new batches into its files."""
+    root = Path(table)
+    if not root.is_dir():
+        return
+    for p in root.iterdir():
+        if p.name in ("data", "_snapshots"):
+            continue
+        if p.suffix == ".parquet" or (p.is_dir() and any(p.rglob("*.parquet"))):
+            raise ValueError(
+                f"{table} holds plain parquet files but no snapshot log; "
+                "migrate it with sinks.snapshots.commit or use a fresh outdir"
+            )
+
+
+def _held_batch_ids(log: list[dict]) -> list[str]:
+    """Batch ids whose rows the head of `log` holds. Each manifest
+    carries them forward (`batch_ids`), so compaction and expiry never
+    lose them; manifests written before that field existed fall back
+    to every summary `batch_id` in the log."""
+    if not log:
+        return []
+    if "batch_ids" in log[-1]:
+        return list(log[-1]["batch_ids"])
+    ids = [s.get("summary", {}).get("batch_id") for s in log]
+    return list(dict.fromkeys(i for i in ids if i))
+
+
 def commit(
     spark: SparkSession,
     df: DataFrame,
     table: str,
     operation: str = "append",
     summary: dict | None = None,
+    partition_by: list[str] | None = None,
+    expected_rows: int | None = None,
+    parent_id: int | None = None,
 ) -> dict:
     """Write df as a new immutable batch + manifest. Atomicity: the
     batch directory is fully written before the manifest file is
@@ -124,14 +167,59 @@ def commit(
     leaves an orphan data directory (invisible to every reader) and
     no new snapshot. Concurrent commits race on the manifest version;
     the loser gets CommitConflictError (see _publish), never a silent
-    clobber."""
-    _check_local(table)
-    batch = f"data/{uuid.uuid4().hex}"
-    batch_path = str(Path(table) / batch)
-    df.write.mode("error").parquet(batch_path)
-    n_rows = spark.read.parquet(batch_path).count()  # footer-count, cheap
+    clobber.
 
-    parent = current_snapshot(table)
+    `partition_by` is the table's partition spec (Iceberg's identity
+    partitions): the batch is written hive-style under those columns
+    and `read` prunes on them. Every commit of a table must use the
+    same spec — mixed layouts would make the table unreadable.
+    `expected_rows` aborts the commit (nothing published, the batch
+    deleted) when the written batch holds a different row count;
+    `parent_id` aborts it with CommitConflictError when the table has
+    moved past the snapshot the caller read — together they make a
+    rewrite of the current snapshot (jobs/compact.py) safe.
+
+    The manifest's `batch_ids` is the parent's plus this commit's
+    summary `batch_id`, if any: an append or a merging overwrite adds
+    the batch, a compaction (no batch id) keeps the parent's set."""
+    import shutil
+
+    _check_local(table)
+    spec = list(partition_by or [])
+    head = current_snapshot(table)
+    if head is None:
+        _refuse_plain_parquet(table)
+    if head is not None and operation == "append" and head.get("partition_by", []) != spec:
+        raise ValueError(
+            f"{table} is partitioned by {head.get('partition_by', [])}; "
+            f"cannot append a batch partitioned by {spec}"
+        )
+    batch = f"data/{uuid.uuid4().hex}"
+    batch_path = Path(table) / batch
+    writer = df.write.mode("error")
+    if spec:
+        writer = writer.partitionBy(*spec)
+    writer.parquet(str(batch_path))
+    # footer-count, cheap; an empty partitioned write leaves no files
+    has_files = any(batch_path.rglob("*.parquet"))
+    n_rows = spark.read.parquet(str(batch_path)).count() if has_files else 0
+    log = snapshots(table)
+    parent = log[-1] if log else None
+    # both aborts remove the batch just written: nothing references it
+    if expected_rows is not None and n_rows != expected_rows:
+        shutil.rmtree(batch_path, ignore_errors=True)
+        raise RuntimeError(
+            f"{table}: batch holds {n_rows} rows, expected {expected_rows}; not committed"
+        )
+    if parent_id is not None and (parent or {}).get("snapshot_id") != parent_id:
+        shutil.rmtree(batch_path, ignore_errors=True)
+        raise CommitConflictError(
+            f"{table} moved past snapshot {parent_id}; re-read and retry"
+        )
+    batch_ids = _held_batch_ids(log)
+    new_id = (summary or {}).get("batch_id")
+    if new_id and new_id not in batch_ids:
+        batch_ids.append(new_id)
     if operation == "append" and parent is not None:
         files = list(parent["batches"]) + [batch]
         total = parent["total_rows"] + n_rows
@@ -147,12 +235,33 @@ def commit(
         # handle: jobs derive per-batch side tables from it without
         # re-reading the whole table (read_incremental)
         "new_batches": [batch],
+        "timestamp_ms": int(time.time() * 1000),
         "batch_rows": n_rows,
         "total_rows": total,
+        "partition_by": spec,
+        "batch_ids": batch_ids,
         "summary": summary or {},
     }
     _publish(snap, table)
     return snap
+
+
+def committed_batch_ids(table: str) -> set[str]:
+    """The batch ids the current snapshot holds — the idempotence key
+    every job uses: a batch whose id is here was applied, so a re-run
+    after a crash skips it. Read from the head manifest only, so it
+    survives compaction and expire_snapshots."""
+    return set(_held_batch_ids(snapshots(table)))
+
+
+def read_or_none(spark: SparkSession, table: str) -> DataFrame | None:
+    """Current table state, or None if nothing is committed yet. A
+    corrupt manifest raises, and so does a plain-parquet directory with
+    no log: a resume must abort there, not silently start over."""
+    if current_snapshot(table) is None:
+        _refuse_plain_parquet(table)
+        return None
+    return read(spark, table)
 
 
 def read(
@@ -207,14 +316,18 @@ def rollback(table: str, snapshot_id: int) -> dict:
     if snapshot_id not in by_id:
         raise KeyError(f"snapshot {snapshot_id} not in {sorted(by_id)}")
     target, head = by_id[snapshot_id], log[-1]
+    upto = [s for s in log if s["snapshot_id"] <= snapshot_id]
     snap = {
         "snapshot_id": head["snapshot_id"] + 1,
         "parent_id": head["snapshot_id"],
         "operation": "rollback",
         "batches": list(target["batches"]),
         "new_batches": [],
+        "timestamp_ms": int(time.time() * 1000),
         "batch_rows": 0,
         "total_rows": target["total_rows"],
+        "partition_by": target.get("partition_by", []),
+        "batch_ids": _held_batch_ids(upto),
         "summary": {"rolled_back_to": snapshot_id},
     }
     _publish(snap, table)
@@ -234,13 +347,12 @@ def remove_orphans(table: str, min_age_sec: float = 86400.0) -> dict:
     longest batch-write-to-publish gap. Returns {removed_batches,
     skipped_young}."""
     import shutil
-    import time as _time
 
     live = {b for s in snapshots(table) for b in s["batches"]}
     data = Path(table) / "data"
     removed = 0
     skipped = 0
-    cutoff = _time.time() - min_age_sec
+    cutoff = time.time() - min_age_sec
     if data.exists():
         for d in data.iterdir():
             if not d.is_dir() or f"data/{d.name}" in live:

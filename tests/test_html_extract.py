@@ -366,17 +366,48 @@ def test_decode_html_honors_declared_charset():
     assert isinstance(decode_html("é".encode("latin-1")), str)
 
 
+def test_charset_inside_other_attribute_value_is_not_a_declaration():
+    """A charset= that only appears inside some other attribute's value
+    (here a meta description) declares nothing: valid UTF-8 must not
+    be mis-decoded as latin-1. A real declaration after it still wins."""
+    from pdf_parser_spark.core.html_extract import decode_html, sniff_charset
+
+    decoy = '<meta name="description" content="save as charset=latin1">'
+    page = (decoy + "<p>naïve café</p>").encode("utf-8")
+    assert sniff_charset(page) is None
+    assert "naïve café" in decode_html(page)
+    declared = (decoy + '<meta charset="iso-8859-1"><p>café</p>').encode("iso-8859-1")
+    assert sniff_charset(declared) == "iso-8859-1"
+    assert "café" in decode_html(declared)
+
+
+def test_unclosed_title_stops_at_next_start_tag():
+    """A <title> that is never closed ends at the next start tag: the
+    rest of the page is not swallowed into the title field, and the
+    head metadata after it is still harvested."""
+    from pdf_parser_spark.core.html_extract import extract_metadata
+
+    page = (
+        "<html><head><title>Real title<meta name=description content=d></head>"
+        "<body><p>Body text that is not the title.</p></body></html>"
+    )
+    m = extract_metadata(page)
+    assert m["title"] == "Real title"
+    assert m["description"] == "d"
+
+
 def test_fuzz_columnar_robots_grammar_matches_parser():
     """Differential fuzz: the curate gate's regex (webtext_filters.
     _ROBOTS_NOINDEX_RX, a Spark/Java pattern that also compiles under
     Python re) must agree with the DOM parser's harvested robots
     field across generated meta-tag spellings — attribute order,
-    quoting style, casing, directive lists and decoy tags. Divergence
-    means the funnel drops (or keeps) pages the metadata table
-    contradicts."""
+    quoting style (unquoted included), casing, directive lists, names
+    that merely start with robots, and hyphen-prefixed decoy
+    attributes. Divergence means the funnel drops (or keeps) pages
+    the metadata table contradicts."""
     import re
 
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from pdf_parser_spark.core.html_extract import extract_metadata
@@ -388,26 +419,41 @@ def test_fuzz_columnar_robots_grammar_matches_parser():
         ["noindex", "nofollow", "none", "index", "noarchive", "nosnippet"]
     )
     directives = st.lists(directive, min_size=1, max_size=3)
-    quote = st.sampled_from(['"', "'"])
+    quote = st.sampled_from(['"', "'", ""])
     case = st.sampled_from([str.lower, str.upper])
+    decoys = st.sampled_from(
+        ["", 'data-content="noindex"', "data-content=none", "data-name='robots'", "data-name=robots"]
+    )
+    plain = dict(
+        q='"', nq='"', content_first=False, fn=str.lower, pad="", name="robots", decoy="", at=0
+    )
 
     @settings(max_examples=150, deadline=None)
     @given(
         ds=directives,
         q=quote,
+        nq=quote,
         content_first=st.booleans(),
         fn=case,
         pad=st.sampled_from(["", " ", "  "]),
+        name=st.sampled_from(["robots", "robotsXYZ"]),
+        decoy=decoys,
+        at=st.integers(0, 2),
     )
-    def run(ds, q, content_first, fn, pad):
-        content = ", ".join(ds)
-        name_attr = fn(f"name={pad}{q}robots{q}")
+    @example(ds=["noindex"], **{**plain, "q": "", "nq": ""})
+    @example(ds=["noindex"], **{**plain, "nq": "", "name": "robotsXYZ"})
+    @example(ds=["index"], **{**plain, "decoy": 'data-content="noindex"'})
+    @example(ds=["noindex"], **{**plain, "name": "robotsXYZ", "decoy": "data-name=robots"})
+    def run(ds, q, nq, content_first, fn, pad, name, decoy, at):
+        # an unquoted value ends at whitespace, so its list has no spaces
+        content = (", " if q else ",").join(ds)
+        name_attr = fn(f"name={pad}{nq}{name}{nq}")
         content_attr = fn(f"content={pad}{q}{content}{q}")
-        attrs = (
-            f"{content_attr} {name_attr}" if content_first else f"{name_attr} {content_attr}"
-        )
-        html = f"<html><head><meta {attrs}><title>t</title></head></html>"
-        want = any(d in ("noindex", "none") for d in ds)
+        attrs = [content_attr, name_attr] if content_first else [name_attr, content_attr]
+        if decoy:
+            attrs.insert(at, decoy)
+        html = f"<html><head><meta {' '.join(attrs)}><title>t</title></head></html>"
+        want = name == "robots" and any(d in ("noindex", "none") for d in ds)
         # parser ground truth: the robots STRING it harvests implies
         # the same keep/drop decision (case-insensitive word match)
         harvested = extract_metadata(html)["robots"] or ""
@@ -422,13 +468,15 @@ def test_fuzz_columnar_robots_grammar_matches_parser():
 
 def test_fuzz_columnar_href_grammar_matches_parser():
     """Differential fuzz for the outlink regex: across quoting styles,
-    casing, attribute order and decoy attributes, the columnar grammar
-    extracts exactly the hrefs the HTML parser sees (entity-free,
-    url-safe alphabet — the operator contract is RAW attribute text)."""
+    casing, attribute order and decoy attributes (hyphen-prefixed
+    data-href included, also on anchors without an href), the columnar
+    grammar extracts exactly the hrefs the HTML parser sees
+    (entity-free, url-safe alphabet — the operator contract is RAW
+    attribute text)."""
     import re
     from html.parser import HTMLParser
 
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from pdf_parser_spark.operators.html_extract import _HREF_RX
@@ -445,8 +493,11 @@ def test_fuzz_columnar_href_grammar_matches_parser():
         q=st.sampled_from(['"', "'", ""]),
         fn=st.sampled_from([str.lower, str.upper]),
         decoy_first=st.booleans(),
+        decoy=st.sampled_from(['class="x"', 'data-href="decoy"', "data-href=decoy"]),
     )
-    def run(hrefs, q, fn, decoy_first):
+    @example(hrefs=["/x"], q='"', fn=str.lower, decoy_first=False, decoy='data-href="decoy"')
+    @example(hrefs=[], q='"', fn=str.lower, decoy_first=False, decoy="data-href=decoy")
+    def run(hrefs, q, fn, decoy_first, decoy):
         from hypothesis import assume
 
         # HTML5 forbids '=' inside UNQUOTED attribute values (the
@@ -457,10 +508,9 @@ def test_fuzz_columnar_href_grammar_matches_parser():
             # case transform applies to markup names only — attribute
             # VALUES are case-significant and must round-trip raw
             attr = f"{fn('href')}={q}{h}{q}"
-            decoy = f"{fn('class')}=\"x\""
             attrs = f"{decoy} {attr}" if decoy_first else f"{attr} {decoy}"
             parts.append(f"<{fn('a')} {attrs}>t</{fn('a')}>")
-        parts.append("<a>bare anchor</a><p>filler</p>")
+        parts.append(f"<a>bare anchor</a><a {decoy}>decoy only</a><p>filler</p>")
         html = "".join(parts)
 
         got = [m.group(1).strip("\"'") for m in rx.finditer(html)]

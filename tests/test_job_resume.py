@@ -7,8 +7,27 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from jobs.extract import run as run_job
+from jobs.extract import SIDE_TABLES, run as run_job
+from pdf_parser_spark.sinks import snapshots as sn
 from pdf_parser_spark.sources.corpus import synthetic_documents, write_documents
+
+
+def _tbl(spark, out, name):
+    return sn.read(spark, str(Path(out) / name))
+
+
+def _crash_commits_to(monkeypatch, *names):
+    """Simulate a crash: sn.commit raises for the named tables (every
+    other commit goes through). Returns the real commit."""
+    real = sn.commit
+
+    def flaky(spark, df, table, *a, **k):
+        if Path(table).name in names:
+            raise RuntimeError(f"simulated crash before committing {table}")
+        return real(spark, df, table, *a, **k)
+
+    monkeypatch.setattr(sn, "commit", flaky)
+    return real
 
 
 def test_resume_skips_already_extracted(spark, tmp_path):
@@ -28,8 +47,8 @@ def test_resume_skips_already_extracted(spark, tmp_path):
     assert second["total_extracted"] == 24
 
     # side tables exist and line up with the extracted batch
-    toc = spark.read.parquet(str(Path(out) / "toc"))
-    lineage = spark.read.parquet(str(Path(out) / "lineage"))
+    toc = _tbl(spark, out, "toc")
+    lineage = _tbl(spark, out, "lineage")
     assert toc.count() > 0
     rolled = lineage.agg({"docs": "sum"}).collect()[0][0]
     assert rolled == 24
@@ -49,15 +68,16 @@ def test_resume_extracts_only_remainder(spark, tmp_path):
     assert second["newly_extracted"] == 10
     assert second["total_extracted"] == 20
     # idempotent per url: no duplicates after the resumed append
-    ex = spark.read.parquet(str(Path(out) / "extracted"))
+    ex = _tbl(spark, out, "extracted")
     assert ex.select("url").distinct().count() == 20
     assert ex.count() == 20
 
 
 def test_bucketed_output_prunes_lookups(spark, tmp_path):
-    """url_buckets=N → bucket(N, url)-style layout: a point lookup's
-    scan carries a PartitionFilters entry on url_bucket and reads one
-    bucket directory; resume still works over the partitioned table."""
+    """url_buckets=N → bucket(N, url) partition spec on the snapshot
+    table: a point lookup's scan carries a PartitionFilters entry on
+    url_bucket and reads one bucket directory per batch; resume still
+    works over the partitioned table."""
     from pyspark.sql import functions as F
 
     corpus = str(tmp_path / "docs.parquet")
@@ -66,7 +86,7 @@ def test_bucketed_output_prunes_lookups(spark, tmp_path):
     first = run_job(corpus, out, resume=False, spark=spark, url_buckets=8)
     assert first["newly_extracted"] == 20
 
-    ex = spark.read.parquet(str(Path(out) / "extracted"))
+    ex = _tbl(spark, out, "extracted")
     url = ex.select("url").first()["url"]
     bucket = ex.where(F.col("url") == url).select("url_bucket").first()["url_bucket"]
     lookup = ex.where(F.col("url_bucket") == bucket)
@@ -75,6 +95,13 @@ def test_bucketed_output_prunes_lookups(spark, tmp_path):
 
     second = run_job(corpus, out, resume=True, spark=spark, url_buckets=8)
     assert second["newly_extracted"] == 0 and second["total_extracted"] == 20
+    log = sn.snapshots(str(Path(out) / "extracted"))
+    assert [s["partition_by"] for s in log] == [["url_bucket"], ["url_bucket"]]
+    # a batch with a different partition spec cannot join the table
+    import pytest
+
+    with pytest.raises(ValueError, match="partitioned by"):
+        run_job(corpus, out, resume=True, spark=spark)
 
 
 def test_curate_funnel_and_resume(spark, tmp_path):
@@ -102,7 +129,7 @@ def test_curate_funnel_and_resume(spark, tmp_path):
     assert second["newly_curated"] == 0
     assert second["total_curated"] == first["total_curated"]
 
-    curated = spark.read.parquet(str(Path(out) / "curated"))
+    curated = _tbl(spark, out, "curated")
     # curated rows keep the input_hint schema and PII-redacted text
     assert set(curated.columns) == {"url", "warc_ts", "html", "text", "lang"}
     assert curated.count() == first["total_curated"]
@@ -116,7 +143,7 @@ def test_curate_quarantine_accounts_every_drop(spark, tmp_path):
     write_documents(synthetic_documents(spark, 24, seed=42), corpus)
     m = run_curate(corpus, out, spark=spark, resume=False)
 
-    quarantined = spark.read.parquet(str(Path(out) / "quarantine"))
+    quarantined = _tbl(spark, out, "quarantine")
     by_reason = {r["reason"]: r["n"] for r in quarantined.groupBy("reason").agg(
         __import__("pyspark.sql.functions", fromlist=["F"]).count("*").alias("n")
     ).collect()}
@@ -125,7 +152,7 @@ def test_curate_quarantine_accounts_every_drop(spark, tmp_path):
     assert by_reason.get("exact_dup", 0) == m["dropped_exact_dup"]
     assert by_reason.get("near_dup", 0) == m["dropped_near_dup"]
     # curated ∪ quarantined = every new input url, disjointly
-    curated = spark.read.parquet(str(Path(out) / "curated")).select("url")
+    curated = _tbl(spark, out, "curated").select("url")
     q_urls = quarantined.select("url")
     assert curated.intersect(q_urls).count() == 0
     assert curated.union(q_urls).distinct().count() == 24
@@ -141,17 +168,17 @@ def test_curate_resume_does_not_reprocess_quarantine(spark, tmp_path):
     out = str(tmp_path / "rqcur")
     write_documents(synthetic_documents(spark, 24, seed=42), corpus)
     first = run_curate(corpus, out, spark=spark, resume=False)
-    q1 = spark.read.parquet(str(Path(out) / "quarantine"))
+    q1 = _tbl(spark, out, "quarantine")
     n_q1 = q1.count()
     assert n_q1 > 0  # fixture must actually exercise the drop path
 
     second = run_curate(corpus, out, spark=spark, resume=True)
     assert second["new_docs"] == 0  # nothing left to adjudicate
-    q2 = spark.read.parquet(str(Path(out) / "quarantine"))
+    q2 = _tbl(spark, out, "quarantine")
     assert q2.count() == n_q1  # no duplicate re-appends
     assert q2.select("url", "reason").distinct().count() == n_q1
     # disjoint accounting still holds after the resume
-    curated = spark.read.parquet(str(Path(out) / "curated")).select("url")
+    curated = _tbl(spark, out, "curated").select("url")
     assert curated.intersect(q2.select("url")).count() == 0
     assert curated.union(q2.select("url")).distinct().count() == 24
     assert second["total_curated"] == first["total_curated"]
@@ -203,27 +230,74 @@ def test_compact_reduces_files_preserves_rows(spark, tmp_path):
 
     path = str(tmp_path / "frag")
     docs = synthetic_documents(spark, 40, seed=42)
-    # fragment: 10 append batches -> many small files
+    # fragment: 10 append commits -> many small files
     for i in range(10):
-        docs.where(f"pmod(xxhash64(url), 10) = {i}").write.mode("append").parquet(path)
-    before = len(list(Path(path).rglob("*.parquet")))
-    assert before >= 10
+        sn.commit(spark, docs.where(f"pmod(xxhash64(url), 10) = {i}"), path)
+    before = sn.current_snapshot(path)
 
     m = run_compact(path, key="url", target_mb=64, spark=spark)
     assert m["rows"] == 40
-    assert m["files_after"] < before
-    after = spark.read.parquet(path)
+    assert m["files_before"] >= 10
+    assert m["files_after"] < m["files_before"]
+    after = sn.read(spark, path)
     assert after.count() == 40
     assert after.select("url").distinct().count() == 40
-    # no leftover tmp/old dirs
-    assert not Path(path + "__compact_tmp").exists()
-    assert not Path(path + "__old").exists()
+    # one overwrite commit on top of the log; the old file set stays
+    # addressable (time travel) until expire_snapshots
+    head = sn.current_snapshot(path)
+    assert head["operation"] == "overwrite" and head["parent_id"] == before["snapshot_id"]
+    assert sn.read(spark, path, before["snapshot_id"]).count() == 40
+
+
+def test_compact_row_count_mismatch_keeps_current_rows(spark, tmp_path, monkeypatch):
+    """The row-count invariant runs before the overwrite manifest is
+    published: a rewrite that loses rows commits nothing, and the
+    table's current state is still the pre-compaction rows."""
+    import pytest
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from jobs.compact import run as run_compact
+
+    path = str(tmp_path / "lossy")
+    docs = synthetic_documents(spark, 20, seed=42)
+    for i in range(4):
+        sn.commit(spark, docs.where(f"pmod(xxhash64(url), 4) = {i}"), path)
+    head = sn.current_snapshot(path)
+    want = sorted(r["url"] for r in sn.read(spark, path).select("url").collect())
+
+    # a rewrite that silently drops rows (the bug the invariant exists for)
+    real = DataFrame.repartitionByRange
+    monkeypatch.setattr(
+        DataFrame, "repartitionByRange",
+        lambda self, *a, **k: real(self, *a, **k).limit(5),
+    )
+    with pytest.raises(RuntimeError, match="expected 20"):
+        run_compact(path, key="url", spark=spark)
+    monkeypatch.setattr(DataFrame, "repartitionByRange", real)
+
+    assert sn.current_snapshot(path) == head
+    got = sorted(r["url"] for r in sn.read(spark, path).select("url").collect())
+    assert got == want
+    # the rejected batch was removed, not left as an orphan
+    live = {b for s in sn.snapshots(path) for b in s["batches"]}
+    assert {f"data/{d.name}" for d in (Path(path) / "data").iterdir()} == live
+
+
+def test_compact_refuses_table_without_snapshot_log(spark, tmp_path):
+    import pytest
+
+    from jobs.compact import run as run_compact
+
+    path = str(tmp_path / "plain")
+    synthetic_documents(spark, 4, seed=42).write.parquet(path)
+    with pytest.raises(ValueError, match="no snapshot log"):
+        run_compact(path, spark=spark)
 
 
 def test_resume_side_tables_incremental(spark, tmp_path):
-    """Round-4 scale fix: a resume run derives side tables from the
-    NEW batch only (observe()-counted) and appends — totals unchanged,
-    but the side-table write cost is ∝ new docs, not corpus size."""
+    """A resume run derives side tables from the NEW batch only and
+    appends — totals unchanged, but the side-table write cost is ∝ new
+    docs, not corpus size."""
     corpus_half = str(tmp_path / "ih.parquet")
     corpus_full = str(tmp_path / "if.parquet")
     out = str(tmp_path / "inc_out")
@@ -235,18 +309,26 @@ def test_resume_side_tables_incremental(spark, tmp_path):
     assert first["side_table_rows_processed"] == 10
 
     second = run_job(corpus_full, out, resume=True, spark=spark)
-    # the observed side-table input is exactly the new batch
+    # the side-table input is exactly the new batch
     assert second["side_table_rows_processed"] == 10
     assert second["total_extracted"] == 20
+    validation_log = sn.snapshots(str(Path(out) / "validation"))
+    assert [s["batch_rows"] for s in validation_log] == [10, 10]
+    assert [s["summary"]["batch_id"] for s in validation_log] == [
+        first["batch_id"], second["batch_id"]
+    ]
 
     # appended side tables still cover the WHOLE corpus, disjointly
-    validation = spark.read.parquet(str(Path(out) / "validation"))
+    validation = _tbl(spark, out, "validation")
     assert validation.count() == 20
     assert validation.select("url").distinct().count() == 20
-    lineage = spark.read.parquet(str(Path(out) / "lineage"))
+    lineage = _tbl(spark, out, "lineage")
     assert lineage.agg({"docs": "sum"}).collect()[0][0] == 20
-    toc = spark.read.parquet(str(Path(out) / "toc"))
+    toc = _tbl(spark, out, "toc")
     assert toc.select("url").distinct().count() > 10  # both batches present
+    assert set(r["batch"] for r in toc.select("batch").distinct().collect()) == {
+        first["batch_id"], second["batch_id"]
+    }
 
 
 def test_resume_corrupt_checkpoint_aborts(spark, tmp_path):
@@ -255,39 +337,43 @@ def test_resume_corrupt_checkpoint_aborts(spark, tmp_path):
     import pytest
 
     corpus = str(tmp_path / "cc.parquet")
-    out = str(tmp_path / "cc_out")
     write_documents(synthetic_documents(spark, 8, seed=42), corpus)
 
-    # snapshots mode: truncated manifest
-    run_job(corpus, out, resume=False, spark=spark, snapshots=True)
+    # truncated manifest
+    out = str(tmp_path / "cc_out")
+    run_job(corpus, out, resume=False, spark=spark)
     man = next((Path(out) / "extracted" / "_snapshots").glob("v*.json"))
     n_files = len(list(Path(out).rglob("*.parquet")))
     man.write_text(man.read_text()[: len(man.read_text()) // 2])
     with pytest.raises(Exception) as ei:
-        run_job(corpus, out, resume=True, spark=spark, snapshots=True)
+        run_job(corpus, out, resume=True, spark=spark)
     assert not isinstance(ei.value, FileNotFoundError)
     # table unchanged: nothing was re-extracted/appended
     assert len(list(Path(out).rglob("*.parquet"))) == n_files
 
-    # plain mode: unreadable parquet checkpoint
+    # unreadable data file behind an intact manifest
     out2 = str(tmp_path / "cc_out2")
-    (Path(out2) / "extracted").mkdir(parents=True)
-    (Path(out2) / "extracted" / "part-00000.parquet").write_bytes(b"not parquet")
+    run_job(corpus, out2, resume=False, spark=spark)
+    head = sn.current_snapshot(str(Path(out2) / "extracted"))
+    for f in (Path(out2) / "extracted" / head["batches"][0]).glob("*.parquet"):
+        f.write_bytes(b"not parquet")
     with pytest.raises(Exception):
         run_job(corpus, out2, resume=True, spark=spark)
+    assert sn.current_snapshot(str(Path(out2) / "extracted")) == head
 
 
 def test_resume_fresh_table_still_full_run(spark, tmp_path):
-    """The narrowed except still treats a genuinely missing checkpoint
-    as 'nothing extracted yet' in both modes."""
+    """A table with no snapshot log means 'nothing extracted yet': a
+    resume into a fresh outdir, or one whose table directory exists
+    but holds no commit, is a full run."""
     corpus = str(tmp_path / "fr.parquet")
     write_documents(synthetic_documents(spark, 6, seed=42), corpus)
     m1 = run_job(corpus, str(tmp_path / "fr_out"), resume=True, spark=spark)
     assert m1["newly_extracted"] == 6 and m1["already_extracted"] == 0
-    m2 = run_job(
-        corpus, str(tmp_path / "fr_out_s"), resume=True, spark=spark, snapshots=True
-    )
+    (tmp_path / "fr_out_s" / "extracted").mkdir(parents=True)
+    m2 = run_job(corpus, str(tmp_path / "fr_out_s"), resume=True, spark=spark)
     assert m2["newly_extracted"] == 6 and m2["already_extracted"] == 0
+    assert m2["snapshot_id"] == 1
 
 
 def test_extract_rejects_remote_outdir(spark):
@@ -298,13 +384,12 @@ def test_extract_rejects_remote_outdir(spark):
 
 
 def test_curate_snapshot_mode_resume(spark, tmp_path):
-    """curate --snapshots: curated AND quarantine are snapshot tables —
-    each run is one atomic commit per table, resume anti-joins the
-    current snapshots, and a corrupt manifest aborts the resume."""
+    """curated AND quarantine are snapshot tables — each run is one
+    atomic commit per table, resume anti-joins the current snapshots,
+    and a corrupt manifest aborts the resume."""
     import pytest
 
     from jobs.curate import run as run_curate
-    from pdf_parser_spark.sinks import snapshots as sn
 
     corpus_half = str(tmp_path / "sh.parquet")
     corpus_full = str(tmp_path / "sf.parquet")
@@ -313,11 +398,15 @@ def test_curate_snapshot_mode_resume(spark, tmp_path):
     write_documents(full.limit(12), corpus_half)
     write_documents(full, corpus_full)
 
+    # snapshots=True is still accepted; False has no layout to select
+    with pytest.raises(ValueError, match="snapshot tables only"):
+        run_curate(corpus_half, out, spark=spark, snapshots=False)
+
     first = run_curate(corpus_half, out, spark=spark, resume=False, snapshots=True)
     assert first["snapshot_id"] == 1
     assert first["new_docs"] == 12
 
-    second = run_curate(corpus_full, out, spark=spark, resume=True, snapshots=True)
+    second = run_curate(corpus_full, out, spark=spark, resume=True)
     assert second["snapshot_id"] == 2
     assert second["new_docs"] == 12  # only the unseen half re-adjudicated
     assert second["already_curated"] == first["total_curated"]
@@ -336,7 +425,7 @@ def test_curate_snapshot_mode_resume(spark, tmp_path):
     man = sorted((Path(out) / "curated" / "_snapshots").glob("v*.json"))[-1]
     man.write_text(man.read_text()[:40])
     with pytest.raises(Exception) as ei:
-        run_curate(corpus_full, out, spark=spark, resume=True, snapshots=True)
+        run_curate(corpus_full, out, spark=spark, resume=True)
     assert not isinstance(ei.value, FileNotFoundError)
 
 
@@ -349,162 +438,206 @@ def test_curate_rejects_remote_outdir(spark):
         run_curate("/tmp/in.parquet", "s3://bucket/out", spark=spark)
 
 
-def test_side_table_crash_heal(spark, tmp_path):
-    """r4 review finding: a crash between the extracted append and the
-    side-table appends must not lose the batch's side rows forever.
-    Simulate the crash by deleting two side-table batch partitions and
-    demoting the marker to pending; the next run heals them."""
-    import json as _json
+def _assert_side_tables_whole(spark, out, batch_id, n_docs):
+    """Every side table holds the batch exactly once and covers every
+    extracted doc."""
+    for name in SIDE_TABLES:
+        table = str(out / name)
+        assert [s["summary"]["batch_id"] for s in sn.snapshots(table)] == [batch_id], name
+        assert _tbl(spark, out, name).where(f"batch = '{batch_id}'").count() > 0, name
+    val = _tbl(spark, out, "validation")
+    assert val.count() == n_docs
+    assert val.select("url").distinct().count() == n_docs
+    assert _tbl(spark, out, "lineage").agg({"docs": "sum"}).collect()[0][0] == n_docs
+
+
+def test_side_table_crash_heal(spark, tmp_path, monkeypatch):
+    """A crash BETWEEN side-table commits must not lose the batch's
+    remaining side rows, nor duplicate the ones already committed: the
+    next run commits exactly the side tables whose log lacks the
+    batch id."""
+    import pytest
 
     corpus = str(tmp_path / "heal.parquet")
     out = Path(tmp_path / "heal_out")
     write_documents(synthetic_documents(spark, 16, seed=42), corpus)
 
-    first = run_job(corpus, str(out), resume=False, spark=spark)
-    bid = first["batch_id"]
-    # simulate dying mid-side-writes: some batch partitions landed,
-    # some didn't, marker still pending
-    import shutil
-
-    shutil.rmtree(out / "chunks" / f"batch={bid}")
-    shutil.rmtree(out / "lineage" / f"batch={bid}")
-    done = out / "_markers" / f"{bid}.done.json"
-    (out / "_markers" / f"{bid}.pending.json").write_text(done.read_text())
-    done.unlink()
+    # toc and chunks commit, then the run dies before validation
+    real = _crash_commits_to(monkeypatch, "validation", "doc_metrics", "lineage")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_job(corpus, str(out), resume=False, spark=spark)
+    monkeypatch.setattr(sn, "commit", real)
+    bid = sn.current_snapshot(str(out / "extracted"))["summary"]["batch_id"]
+    assert not (out / "validation").exists()
 
     second = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
     assert second["healed_batches"] == [bid]
     assert second["newly_extracted"] == 0
-    # every side table holds the batch exactly once (heal deleted the
-    # survivors' partitions before re-appending — no duplicates)
-    for name in ("toc", "chunks", "validation", "doc_metrics", "lineage"):
-        df = spark.read.parquet(str(out / name))
-        assert df.where(df.batch == bid).count() > 0, name
-    val = spark.read.parquet(str(out / "validation"))
-    assert val.count() == 16
-    assert val.select("url").distinct().count() == 16
-    lineage = spark.read.parquet(str(out / "lineage"))
-    assert lineage.agg({"docs": "sum"}).collect()[0][0] == 16
+    _assert_side_tables_whole(spark, out, bid, 16)
+
+    # healed batches are not healed again
+    third = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
+    assert "healed_batches" not in third
 
 
-def test_side_table_heal_snapshot_mode_without_marker(spark, tmp_path):
-    """Snapshot mode closes the residual window: a committed snapshot
-    with NO marker at all (died before the pending marker) is healed
-    from the snapshot log."""
+def test_side_table_heal_snapshot_mode_without_marker(spark, tmp_path, monkeypatch):
+    """A crash right after the extracted commit, before ANY side-table
+    commit: the extracted log alone identifies the batch, and the next
+    run derives all five side tables from its incremental scan."""
+    import pytest
+
     corpus = str(tmp_path / "healsn.parquet")
     out = Path(tmp_path / "healsn_out")
     write_documents(synthetic_documents(spark, 12, seed=42), corpus)
-    first = run_job(corpus, str(out), resume=False, spark=spark, snapshots=True)
-    bid = first["batch_id"]
-    # simulate: crash right after sn.commit — no side rows, no marker
-    import shutil
+    real = _crash_commits_to(monkeypatch, *SIDE_TABLES)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_job(corpus, str(out), resume=False, spark=spark)
+    monkeypatch.setattr(sn, "commit", real)
+    bid = sn.current_snapshot(str(out / "extracted"))["summary"]["batch_id"]
 
-    for name in ("toc", "chunks", "validation", "doc_metrics", "lineage"):
-        shutil.rmtree(out / name)
-    shutil.rmtree(out / "_markers")
-
-    second = run_job(
-        corpus, str(out), resume=True, spark=spark, snapshots=True, heal_min_age_sec=0
-    )
+    second = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
     assert second["healed_batches"] == [bid]
-    val = spark.read.parquet(str(out / "validation"))
-    assert val.count() == 12 and val.select("url").distinct().count() == 12
+    _assert_side_tables_whole(spark, out, bid, 12)
 
 
-def test_heal_grace_period_skips_fresh_markers(spark, tmp_path):
-    """A fresh pending marker may belong to a LIVE concurrent run on
-    the same outdir — the default grace period must not heal it (the
-    remove_orphans hazard in reverse)."""
+def test_heal_grace_period_skips_fresh_markers(spark, tmp_path, monkeypatch):
+    """A fresh manifest may belong to a LIVE concurrent run on the same
+    outdir that has not reached its side commits yet — the default
+    grace period must not heal it (the remove_orphans hazard in
+    reverse)."""
+    import pytest
+
     corpus = str(tmp_path / "grace.parquet")
     out = Path(tmp_path / "grace_out")
     write_documents(synthetic_documents(spark, 10, seed=42), corpus)
-    first = run_job(corpus, str(out), resume=False, spark=spark)
-    bid = first["batch_id"]
-    done = out / "_markers" / f"{bid}.done.json"
-    (out / "_markers" / f"{bid}.pending.json").write_text(done.read_text())
-    done.unlink()
-    # default heal_min_age_sec (1h): fresh marker untouched
+    real = _crash_commits_to(monkeypatch, *SIDE_TABLES)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_job(corpus, str(out), resume=False, spark=spark)
+    monkeypatch.setattr(sn, "commit", real)
+
+    # default heal_min_age_sec (1h): the fresh commit is left alone
     second = run_job(corpus, str(out), resume=True, spark=spark)
     assert "healed_batches" not in second
-    assert (out / "_markers" / f"{bid}.pending.json").exists()
+    assert not any((out / name).exists() for name in SIDE_TABLES)
+    # once it is older than the grace period, it is healed
+    third = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
+    assert len(third["healed_batches"]) == 1
 
 
-def test_heal_failure_is_isolated_not_fatal(spark, tmp_path):
-    """A stale marker whose recorded files are gone (e.g. compacted
-    away) is surfaced in the summary, not allowed to brick the job."""
-    import json as _json
+def test_heal_failure_is_isolated_not_fatal(spark, tmp_path, monkeypatch):
+    """A batch that needs healing but whose files are gone (compacted
+    away, then removed) is surfaced in the summary, not allowed to
+    brick the job."""
+    import shutil
+
+    import pytest
+
+    from jobs.compact import run as run_compact
 
     corpus = str(tmp_path / "stale.parquet")
     out = Path(tmp_path / "stale_out")
+    extracted = str(out / "extracted")
     write_documents(synthetic_documents(spark, 10, seed=42), corpus)
-    first = run_job(corpus, str(out), resume=False, spark=spark)
-    (out / "_markers" / "deadbatch.pending.json").write_text(
-        _json.dumps({"files": [str(out / "extracted" / "gone.parquet")]})
-    )
+    real = _crash_commits_to(monkeypatch, *SIDE_TABLES)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_job(corpus, str(out), resume=False, spark=spark)
+    monkeypatch.setattr(sn, "commit", real)
+    dead = sn.current_snapshot(extracted)
+    run_compact(extracted, key="url", spark=spark)
+    for b in dead["new_batches"]:
+        shutil.rmtree(out / "extracted" / b)
+
     second = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
     assert second["newly_extracted"] == 0  # the job itself still ran
-    assert second["heal_failures"][0]["batch_id"] == "deadbatch"
-    # marker left for the operator
-    assert (out / "_markers" / "deadbatch.pending.json").exists()
+    assert second["already_extracted"] == 10
+    assert second["heal_failures"][0]["batch_id"] == dead["summary"]["batch_id"]
+    assert "healed_batches" not in second
 
 
-def test_heal_prewrite_marker_after_append_crash(spark, tmp_path):
-    """Plain mode's pre-write marker closes the crash window AFTER the
-    extracted append but BEFORE the batch file list is recorded: heal
-    re-diffs against the recorded pre-write file set."""
-    import json as _json
+def test_heal_after_compact_and_expire_adds_no_duplicates(spark, tmp_path):
+    """Compaction and expire_snapshots drop a side table's older
+    manifests. The head still names every batch it holds, so the heal
+    pass must not commit those batches' side rows a second time."""
+    from jobs.compact import run as run_compact
 
-    corpus = str(tmp_path / "prew.parquet")
-    out = Path(tmp_path / "prew_out")
-    write_documents(synthetic_documents(spark, 10, seed=42), corpus)
-    first = run_job(corpus, str(out), resume=False, spark=spark)
-    bid = first["batch_id"]
-    # rewrite history: as if the run died right after the append —
-    # marker still in pre-write form, no side tables at all
-    import shutil
+    corpus_half = str(tmp_path / "ce_half.parquet")
+    corpus_full = str(tmp_path / "ce_full.parquet")
+    out = tmp_path / "ce_out"
+    full = synthetic_documents(spark, 20, seed=42)
+    write_documents(full.limit(10), corpus_half)
+    write_documents(full, corpus_full)
+    first = run_job(corpus_half, str(out), resume=False, spark=spark)
+    second = run_job(corpus_full, str(out), resume=True, spark=spark)
+    n_toc = _tbl(spark, out, "toc").count()
 
-    for name in ("toc", "chunks", "validation", "doc_metrics", "lineage"):
-        shutil.rmtree(out / name)
-    (out / "_markers" / f"{bid}.done.json").unlink()
-    (out / "_markers" / f"{bid}.pending.json").write_text(
-        _json.dumps({"before_files": []})
-    )
-    second = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
-    assert second["healed_batches"] == [bid]
-    val = spark.read.parquet(str(out / "validation"))
-    assert val.count() == 10 and val.select("url").distinct().count() == 10
+    toc = str(out / "toc")
+    run_compact(toc, key="url", spark=spark)
+    assert sn.expire_snapshots(toc)["removed_snapshots"] == 1
+    # lineage: expiry alone, no compaction
+    assert sn.expire_snapshots(str(out / "lineage"), keep_last=1)["removed_snapshots"] == 1
+    ids = {first["batch_id"], second["batch_id"]}
+    assert sn.committed_batch_ids(toc) == ids
+    assert sn.committed_batch_ids(str(out / "lineage")) == ids
+
+    third = run_job(corpus_full, str(out), resume=True, spark=spark, heal_min_age_sec=0)
+    assert "healed_batches" not in third and "heal_failures" not in third
+    assert _tbl(spark, out, "toc").count() == n_toc
+    assert _tbl(spark, out, "lineage").agg({"docs": "sum"}).collect()[0][0] == 20
 
 
-def test_curate_crash_between_quarantine_and_curated_converges(spark, tmp_path):
-    """curate's two appends (quarantine, then curated) are crash-safe
-    by construction: resume skips urls present in EITHER table, so a
-    run that died after the quarantine write re-adjudicates only the
-    unwritten survivors — and they survive again (their dedup losers
+def test_resume_refuses_plain_parquet_outdir(spark, tmp_path):
+    """An outdir in the older plain-parquet layout (parquet files, no
+    `_snapshots/` log) must not read as an empty table: a resume would
+    re-extract everything into a directory that still holds the old
+    files."""
+    import pytest
+
+    corpus = str(tmp_path / "legacy.parquet")
+    out = tmp_path / "legacy_out"
+    docs = synthetic_documents(spark, 4, seed=42)
+    write_documents(docs, corpus)
+    docs.write.parquet(str(out / "extracted"))
+    for resume in (True, False):
+        with pytest.raises(ValueError, match="no snapshot log"):
+            run_job(corpus, str(out), resume=resume, spark=spark)
+    assert sorted(p.name for p in (out / "extracted").iterdir() if p.is_dir()) == []
+
+
+def test_curate_crash_between_quarantine_and_curated_converges(spark, tmp_path, monkeypatch):
+    """curate's commits (quarantine, then curated) are crash-safe by
+    construction: resume skips urls present in EITHER table, so a run
+    that died after the quarantine commit re-adjudicates only the
+    uncommitted survivors — and they survive again (their dedup losers
     are already quarantined and stay out of the funnel). Pin that
     convergence."""
-    import shutil
+    import pytest
 
     from jobs.curate import run as run_curate
 
     corpus = str(tmp_path / "ccr.parquet")
     out = Path(tmp_path / "ccr_out")
     write_documents(synthetic_documents(spark, 24, seed=42), corpus)
-    first = run_curate(corpus, str(out), spark=spark, resume=False)
-    n_q = spark.read.parquet(str(out / "quarantine")).count()
-    assert n_q > 0
+    # reference run: what a crash-free curate produces
+    ref = run_curate(corpus, str(tmp_path / "ccr_ref"), spark=spark, resume=False)
 
-    # simulate the crash: quarantine landed, curated write did not
-    shutil.rmtree(out / "curated")
+    real = _crash_commits_to(monkeypatch, "curated")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_curate(corpus, str(out), spark=spark, resume=False)
+    monkeypatch.setattr(sn, "commit", real)
+    n_q = _tbl(spark, out, "quarantine").count()
+    assert n_q > 0
+    assert sn.current_snapshot(str(out / "curated")) is None
+
     second = run_curate(corpus, str(out), spark=spark, resume=True)
     # only the lost survivors re-entered the funnel
-    assert second["new_docs"] == first["newly_curated"]
-    assert second["newly_curated"] == first["newly_curated"]
-    assert second["total_curated"] == first["total_curated"]
+    assert second["new_docs"] == ref["newly_curated"]
+    assert second["newly_curated"] == ref["newly_curated"]
+    assert second["total_curated"] == ref["total_curated"]
 
-    cur = spark.read.parquet(str(out / "curated")).select("url")
-    q = spark.read.parquet(str(out / "quarantine"))
+    cur = _tbl(spark, out, "curated").select("url")
+    q = _tbl(spark, out, "quarantine")
     assert q.count() == n_q  # no duplicate quarantine rows
-    assert cur.count() == first["total_curated"]
+    assert cur.count() == ref["total_curated"]
     assert cur.intersect(q.select("url")).count() == 0
     assert cur.union(q.select("url")).distinct().count() == 24
 
@@ -546,7 +679,7 @@ def test_curate_transitive_near_dups_drops_whole_cluster(spark, tmp_path):
     assert pw["dropped_near_dup"] == 1  # only c, the shared id_b
     kept_pw = {
         r["url"]
-        for r in spark.read.parquet(str(tmp_path / "out_pw" / "curated")).collect()
+        for r in _tbl(spark, tmp_path / "out_pw", "curated").collect()
     }
     assert kept_pw == {
         "http://a.example/x", "http://b.example/x",
@@ -561,12 +694,12 @@ def test_curate_transitive_near_dups_drops_whole_cluster(spark, tmp_path):
     assert tr["dropped_near_dup"] == 2  # b and c: whole cluster minus canonical a
     kept_tr = {
         r["url"]
-        for r in spark.read.parquet(str(tmp_path / "out_tr" / "curated")).collect()
+        for r in _tbl(spark, tmp_path / "out_tr", "curated").collect()
     }
     assert kept_tr == {
         "http://a.example/x", "http://d.example/x", "http://e.example/x",
     }
-    q = spark.read.parquet(str(tmp_path / "out_tr" / "quarantine"))
+    q = _tbl(spark, tmp_path / "out_tr", "quarantine")
     near = {r["url"] for r in q.where(q.reason == "near_dup").collect()}
     assert near == {"http://b.example/x", "http://c.example/x"}
 
@@ -588,13 +721,13 @@ def test_curate_history_dedup_across_batches(spark, tmp_path):
         batch1, out, spark=spark, resume=False, near_dups=False, history_dedup=True
     )
     assert first["newly_curated"] > 2
-    store = spark.read.parquet(str(Path(out) / "fingerprints"))
+    store = _tbl(spark, out, "fingerprints")
     assert store.count() == first["newly_curated"]
     assert set(store.columns) == {"url", "fp", "signature"}
 
     # batch 2: an exact twin and a near twin of two CURATED batch-1
     # docs (new urls), plus genuinely new docs
-    curated = spark.read.parquet(str(Path(out) / "curated"))
+    curated = _tbl(spark, out, "curated")
     two = curated.orderBy("url").limit(2).collect()
     exact_twin = spark.createDataFrame(
         [("twin-exact", two[0]["warc_ts"], two[0]["html"], two[0]["text"], two[0]["lang"])],
@@ -625,15 +758,15 @@ def test_curate_history_dedup_across_batches(spark, tmp_path):
     )
     assert second["dropped_exact_dup_history"] >= 1
     assert second["dropped_near_dup_history"] >= 1
-    q = spark.read.parquet(str(Path(out) / "quarantine"))
+    q = _tbl(spark, out, "quarantine")
     reasons = {r["url"]: r["reason"] for r in q.collect()}
     assert reasons.get("twin-exact") == "exact_dup_history"
     assert reasons.get("twin-near") == "near_dup_history"
     # the store grew by exactly the batch's final survivors
-    store2 = spark.read.parquet(str(Path(out) / "fingerprints"))
+    store2 = _tbl(spark, out, "fingerprints")
     assert store2.count() == first["newly_curated"] + second["newly_curated"]
     # twins never reached the curated table
-    cur2 = spark.read.parquet(str(Path(out) / "curated"))
+    cur2 = _tbl(spark, out, "curated")
     assert cur2.where(F.col("url").isin("twin-exact", "twin-near")).count() == 0
 
 
@@ -652,7 +785,7 @@ def test_curate_history_store_bootstrap_and_heal(spark, tmp_path):
     first = run_curate(batch1, out, spark=spark, resume=False, near_dups=False)
     assert not (Path(out) / "fingerprints").exists()
 
-    curated = spark.read.parquet(str(Path(out) / "curated"))
+    curated = _tbl(spark, out, "curated")
     src = curated.orderBy("url").limit(1).collect()[0]
     twin = spark.createDataFrame(
         [("boot-twin", src["warc_ts"], src["html"], src["text"], src["lang"])],
@@ -667,10 +800,10 @@ def test_curate_history_store_bootstrap_and_heal(spark, tmp_path):
     # store bootstrapped from the curated table (marker -1), twin caught
     assert second["store_healed_docs"] == -1
     assert second["dropped_exact_dup_history"] == 1
-    store = spark.read.parquet(str(Path(out) / "fingerprints"))
+    store = _tbl(spark, out, "fingerprints")
     assert store.count() == first["newly_curated"]  # twin itself was dropped
     assert (
-        spark.read.parquet(str(Path(out) / "curated"))
+        _tbl(spark, out, "curated")
         .where(F.col("url") == "boot-twin")
         .count()
         == 0
@@ -714,9 +847,9 @@ def test_curate_drop_noindex_quarantines_optouts(spark, tmp_path):
         + r["dropped_near_dup"]
         + r["newly_curated"]
     ) == r["new_docs"] == 24
-    q = spark.read.parquet(f"{out}/quarantine")
+    q = _tbl(spark, out, "quarantine")
     assert q.where(F.col("reason") == "robots_noindex").count() == n_planted
-    curated = spark.read.parquet(f"{out}/curated")
+    curated = _tbl(spark, out, "curated")
     assert curated.join(
         q.where(F.col("reason") == "robots_noindex"), "url", "left_semi"
     ).count() == 0
@@ -752,11 +885,11 @@ def test_curate_host_cap_stage(spark, tmp_path):
         + r["dropped_host_cap"]
         + r["newly_curated"]
     ) == r["new_docs"] == 48
-    curated = spark.read.parquet(f"{out}/curated")
+    curated = _tbl(spark, out, "curated")
     per_host = curated.groupBy(host_of(F.col("url")).alias("h")).count()
     assert per_host.agg(F.max("count")).first()[0] <= 3
     assert curated.count() == r["newly_curated"]
-    q = spark.read.parquet(f"{out}/quarantine")
+    q = _tbl(spark, out, "quarantine")
     assert q.where("reason = 'host_cap'").count() == r["dropped_host_cap"]
     assert r["dropped_host_cap"] > 0  # the skewed-host corpus exceeds 3/host
     # resume with the same cap: nothing re-enters
@@ -801,13 +934,13 @@ def test_curate_all_stages_compose(spark, tmp_path):
     assert sum(r[k] for k in drops) + r["newly_curated"] == r["new_docs"] == 40
     assert r["dropped_robots_noindex"] > 0 and r["dropped_host_cap"] > 0
 
-    curated = spark.read.parquet(f"{out}/curated")
-    q = spark.read.parquet(f"{out}/quarantine")
+    curated = _tbl(spark, out, "curated")
+    q = _tbl(spark, out, "quarantine")
     # curated/quarantined url sets are disjoint and exhaustive over new docs
     assert curated.join(q, "url", "left_semi").count() == 0
     assert curated.count() + q.select("url").distinct().count() == 40
     # the store holds exactly the curated survivors
-    store = spark.read.parquet(f"{out}/fingerprints")
+    store = _tbl(spark, out, "fingerprints")
     assert store.count() == curated.count()
     assert store.join(curated, "url", "left_anti").count() == 0
 

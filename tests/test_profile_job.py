@@ -8,6 +8,7 @@ sketches), while reading only B.
 
 from __future__ import annotations
 
+import json
 import sys
 from pathlib import Path
 
@@ -16,15 +17,12 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from jobs.corpus_profile import _TABLES, run as run_profile
+from pdf_parser_spark.sinks import snapshots as sn
 from pdf_parser_spark.sources.corpus import synthetic_documents, write_documents
 
 
-def _table(spark, out: str, name: str, snapshots: bool = False):
-    if snapshots:
-        from pdf_parser_spark.sinks import snapshots as sn
-
-        return sn.read(spark, str(Path(out) / name))
-    return spark.read.parquet(str(Path(out) / name))
+def _table(spark, out: str, name: str):
+    return sn.read(spark, str(Path(out) / name))
 
 
 def _sorted_rows(df):
@@ -95,16 +93,14 @@ def test_profile_incremental_merge_equals_rebuild(spark, tmp_path):
 
 
 def test_profile_snapshots_time_travel(spark, tmp_path):
-    from pdf_parser_spark.sinks import snapshots as sn
-
     a = str(tmp_path / "a.parquet")
     ab = str(tmp_path / "ab.parquet")
     write_documents(synthetic_documents(spark, 24, seed=42), a)
     write_documents(synthetic_documents(spark, 40, seed=42), ab)
 
     out = str(tmp_path / "snap")
-    run_profile(a, out, spark=spark, snapshots=True)
-    run_profile(ab, out, spark=spark, resume=True, snapshots=True)
+    run_profile(a, out, spark=spark)
+    run_profile(ab, out, spark=spark, resume=True)
 
     hll_tbl = str(Path(out) / "hll_distinct")
     log = sn.snapshots(hll_tbl)
@@ -115,15 +111,15 @@ def test_profile_snapshots_time_travel(spark, tmp_path):
     fresh_a = str(tmp_path / "fresh_a")
     run_profile(a, fresh_a, spark=spark)
     assert _sorted_rows(sn.read(spark, hll_tbl, snapshot_id=1)) == _sorted_rows(
-        spark.read.parquet(str(Path(fresh_a) / "hll_distinct"))
+        _table(spark, fresh_a, "hll_distinct")
     )
 
-    # merged current state equals the plain-mode rebuild of A ∪ B
+    # merged current state equals a fresh rebuild of A ∪ B
     fresh = str(tmp_path / "fresh_ab")
     run_profile(ab, fresh, spark=spark)
     for name in _TABLES:
         assert _sorted_rows(sn.read(spark, str(Path(out) / name))) == _sorted_rows(
-            spark.read.parquet(str(Path(fresh) / name))
+            _table(spark, fresh, name)
         )
 
 
@@ -178,6 +174,9 @@ def test_profile_crash_between_table_applies_recovers(spark, tmp_path, monkeypat
     # staging survived the crash, sealed
     staged = list((Path(out) / "_staging").iterdir())
     assert len(staged) == 1 and (staged[0] / "_READY.json").exists()
+    bid = json.loads((staged[0] / "_READY.json").read_text())["batch_id"]
+    applied = [bid in sn.committed_batch_ids(str(Path(out) / n)) for n in _TABLES]
+    assert applied == [True, True, False, False]
 
     # re-run WITHOUT --resume (the natural retry): recovery completes
     # the pending batch and the recovered urls are still anti-joined
@@ -194,6 +193,8 @@ def test_profile_crash_between_table_applies_recovers(spark, tmp_path, monkeypat
         assert _sorted_rows(_table(spark, out, name)) == _sorted_rows(
             _table(spark, fresh, name)
         ), f"double-merge after crash for {name}"
+        # one commit per batch: the crashed batch was never re-merged
+        assert len(sn.snapshots(str(Path(out) / name))) == 2
 
 
 def test_profile_unsealed_staging_discarded(spark, tmp_path):
@@ -210,38 +211,6 @@ def test_profile_unsealed_staging_discarded(spark, tmp_path):
     assert r["recovered_batch"] is None
     assert r["newly_profiled"] == 12
     assert not orphan.exists()
-
-
-def test_recover_plain_swaps(tmp_path):
-    """Filesystem-only healing of interrupted table swaps: a sealed
-    .tmp replaces its table (it is strictly newer); an unsealed .tmp
-    is a partial write and is discarded."""
-    from jobs.corpus_profile import _recover_plain_swaps
-
-    out = tmp_path / "prof"
-    # sealed tmp, table missing (crash between rmtree and rename)
-    sealed = out / "word_cms.tmp"
-    sealed.mkdir(parents=True)
-    (sealed / "part-0.parquet").write_text("data")
-    (sealed / "_COMMIT_READY").write_text("")
-    # sealed tmp beside a (stale) table directory
-    sealed2 = out / "len_hist.tmp"
-    sealed2.mkdir()
-    (sealed2 / "part-0.parquet").write_text("new")
-    (sealed2 / "_COMMIT_READY").write_text("")
-    stale = out / "len_hist"
-    stale.mkdir()
-    (stale / "part-0.parquet").write_text("old")
-    # unsealed tmp (crash mid-write)
-    unsealed = out / "fp_bloom.tmp"
-    unsealed.mkdir()
-    (unsealed / "part-0.parquet").write_text("partial")
-
-    healed = _recover_plain_swaps(out)
-    assert sorted(healed) == ["len_hist", "word_cms"]
-    assert (out / "word_cms" / "part-0.parquet").read_text() == "data"
-    assert (out / "len_hist" / "part-0.parquet").read_text() == "new"
-    assert not unsealed.exists() and not sealed.exists() and not sealed2.exists()
 
 
 def test_profile_rerun_without_resume_never_double_counts(spark, tmp_path):

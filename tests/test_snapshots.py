@@ -89,7 +89,7 @@ def test_snapshot_resume_composition(spark, tmp_path):
 
 
 def test_extract_job_snapshot_mode(spark, tmp_path):
-    """jobs/extract.py --snapshots: each run is an atomic snapshot
+    """jobs/extract.py: each run is an atomic snapshot
     commit; resume anti-joins the current snapshot and commits only
     the remainder — the north rule's Iceberg-checkpoint restart."""
     from jobs.extract import run as run_job
@@ -102,10 +102,10 @@ def test_extract_job_snapshot_mode(spark, tmp_path):
     write_documents(full.limit(9), corpus_half)
     write_documents(full, corpus_full)
 
-    first = run_job(corpus_half, out, resume=False, spark=spark, snapshots=True)
+    first = run_job(corpus_half, out, resume=False, spark=spark)
     assert first["snapshot_id"] == 1 and first["newly_extracted"] == 9
 
-    second = run_job(corpus_full, out, resume=True, spark=spark, snapshots=True)
+    second = run_job(corpus_full, out, resume=True, spark=spark)
     assert second["snapshot_id"] == 2
     assert second["already_extracted"] == 9
     assert second["newly_extracted"] == 7
@@ -138,6 +138,37 @@ def test_commit_conflict_detected(spark, tmp_path):
     assert sn.current_snapshot(table)["summary"] == {"writer": "A"}
     # no tmp litter from the failed publish
     assert not list((Path(table) / "_snapshots").glob("*.tmp"))
+
+
+def test_batch_ids_survive_overwrite_expire_and_rollback(spark, tmp_path):
+    """The head manifest names every batch id its rows hold: an
+    overwrite without a batch id (a compaction) keeps the parent's set,
+    expiry cannot drop it, and a rollback restores the target's set."""
+    table = str(tmp_path / "ids")
+    docs = synthetic_documents(spark, 6, seed=42)
+    sn.commit(spark, docs.limit(2), table, summary={"batch_id": "a"})
+    sn.commit(spark, docs.limit(3), table, summary={"batch_id": "b"})
+    sn.commit(spark, sn.read(spark, table), table, operation="overwrite")
+    sn.expire_snapshots(table, keep_last=1)
+    assert sn.committed_batch_ids(table) == {"a", "b"}
+    sn.commit(spark, docs.limit(1), table, summary={"batch_id": "c"})
+    assert sn.committed_batch_ids(table) == {"a", "b", "c"}
+    sn.rollback(table, sn.current_snapshot(table)["snapshot_id"] - 1)
+    assert sn.committed_batch_ids(table) == {"a", "b"}
+
+
+def test_commit_aborts_remove_their_batch(spark, tmp_path):
+    """Both commit aborts (stale parent, row-count mismatch) delete the
+    batch they wrote: no orphan directory is left behind."""
+    table = str(tmp_path / "abort")
+    docs = synthetic_documents(spark, 4, seed=42)
+    sn.commit(spark, docs.limit(2), table)
+    with pytest.raises(sn.CommitConflictError):
+        sn.commit(spark, docs.limit(2), table, parent_id=99)
+    with pytest.raises(RuntimeError, match="expected 5"):
+        sn.commit(spark, docs.limit(2), table, expected_rows=5)
+    live = {b for s in sn.snapshots(table) for b in s["batches"]}
+    assert {f"data/{d.name}" for d in (Path(table) / "data").iterdir()} == live
 
 
 def test_snapshots_reject_remote_uri(spark, tmp_path):

@@ -100,6 +100,7 @@ def test_extract_job_from_warc_with_resume(spark, tmp_path):
     contract (salted repartition, DOM strip, per-doc extraction, side
     tables, anti-join resume) straight from Common Crawl's container."""
     from jobs.extract import run as run_job
+    from pdf_parser_spark.sinks import snapshots as sn
     from pdf_parser_spark.sources.corpus import synthetic_documents
 
     src = synthetic_documents(spark, 10, seed=42).collect()
@@ -119,7 +120,7 @@ def test_extract_job_from_warc_with_resume(spark, tmp_path):
     second = run_job(p, out, resume=True, spark=spark, input_format="warc")
     assert second["already_extracted"] == 10
     assert second["newly_extracted"] == 0
-    ex = spark.read.parquet(str(Path(out) / "extracted"))
+    ex = sn.read(spark, str(Path(out) / "extracted"))
     assert ex.select("url").distinct().count() == ex.count() == 10
 
 
@@ -149,6 +150,7 @@ def test_curate_job_from_warc(spark, tmp_path):
     """jobs/curate.py --input-format warc: the hygiene funnel straight
     from archives — DOM strip recovers the text the filters judge."""
     from jobs.curate import run as run_curate
+    from pdf_parser_spark.sinks import snapshots as sn
     from pdf_parser_spark.sources.corpus import synthetic_documents
 
     src = synthetic_documents(spark, 12, seed=42).collect()
@@ -166,7 +168,7 @@ def test_curate_job_from_warc(spark, tmp_path):
         m["dropped_gopher"] + m["dropped_dup_lines"] + m["dropped_exact_dup"]
         + m["dropped_near_dup"] + m["newly_curated"]
     ) == m["new_docs"] == 12
-    curated = spark.read.parquet(str(Path(out) / "curated"))
+    curated = sn.read(spark, str(Path(out) / "curated"))
     assert set(curated.columns) == {"url", "warc_ts", "html", "text", "lang"}
     assert curated.count() == m["total_curated"] > 0
 

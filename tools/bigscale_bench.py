@@ -428,6 +428,7 @@ def main() -> None:
         import shutil
 
         from jobs.curate import run as run_curate
+        from pdf_parser_spark.sinks import snapshots as sn
 
         n1 = int(args.docs * 0.8)
         outdir = f"/tmp/bigscale_hist_out_{args.docs}"
@@ -439,7 +440,7 @@ def main() -> None:
         r1 = run_curate(
             b1, outdir, spark=spark, resume=False, near_dups=False, history_dedup=True
         )
-        curated = spark.read.parquet(f"{outdir}/curated")
+        curated = sn.read(spark, f"{outdir}/curated")
         tw = curated.where(F.length("text") >= 400).orderBy("url").limit(1000).cache()
         exact_tw = tw.where(F.crc32("url") % 2 == 0).withColumn(
             "url", F.concat(F.col("url"), F.lit("#xd"))
@@ -458,14 +459,14 @@ def main() -> None:
         r2 = run_curate(
             b2, outdir, spark=spark, resume=True, near_dups=False, history_dedup=True
         )
-        q = spark.read.parquet(f"{outdir}/quarantine")
+        q = sn.read(spark, f"{outdir}/quarantine")
         found_exact = q.where(
             (F.col("reason") == "exact_dup_history") & F.col("url").endswith("#xd")
         ).count()
         found_near = q.where(
             (F.col("reason") == "near_dup_history") & F.col("url").endswith("#nd")
         ).count()
-        store_n = spark.read.parquet(f"{outdir}/fingerprints").count()
+        store_n = sn.read(spark, f"{outdir}/fingerprints").count()
         extra = results["legs"].setdefault("curate_history_dedup", {})
         extra.update(
             {
