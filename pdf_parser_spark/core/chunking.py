@@ -31,6 +31,7 @@ import re
 
 from .headings import detect_headings
 from .text import (
+    CAPTION_KEYWORD,
     FIGURE_CAPTION,
     TABLE_CAPTION,
     clean_content,
@@ -72,7 +73,7 @@ def _gather_lines(
     Spark-native analog: a range join pages⋈bounds on
     page_no BETWEEN pstart AND pend within url (SURVEY W6); kept
     imperative here because the whole document is already local to
-    one applyInPandas group.
+    one extract_document call (one row of the mapInPandas batch).
     """
     lines: list[str] = []
     for p in range(pstart, pend + 1):
@@ -84,39 +85,29 @@ def _gather_lines(
     return lines
 
 
-def _assemble(lines: list[str], section_id: str, title: str, pstart: int, pend: int) -> dict:
-    """Clean gathered lines into one chunk record. chunk.py:255-265."""
-    return {
-        "section_path": f"{section_id} {title}",
-        "section_id": section_id,
-        "title": title,
-        "page_range": f"{pstart},{pend}",
-        "content": clean_content("\n".join(lines)),
-        "tables": [],
-        "figures": [],
-    }
-
-
-def enrich_captions(chunks: list[dict]) -> None:
-    """Fill ordered figure/table id lists from content lines.
+def _caption_ids(content: str) -> tuple[list[str], list[str]]:
+    """Ordered (figure, table) id lists from content lines.
 
     chunk.py:278-290. Order + duplicates preserved; figure match wins
-    over table match per line.
+    over table match per line. Lines without a CAPTION_KEYWORD hit
+    cannot yield a caption and skip norm_caption_line.
     """
-    for ch in chunks:
-        ch["figures"] = []
-        ch["tables"] = []
-        if not ch["content"]:
+    figures: list[str] = []
+    tables: list[str] = []
+    if not CAPTION_KEYWORD.search(content):
+        return figures, tables
+    for line in content.splitlines():
+        if not CAPTION_KEYWORD.search(line):
             continue
-        for line in ch["content"].splitlines():
-            ln = norm_caption_line(line)
-            m = FIGURE_CAPTION.search(ln)
-            if m:
-                ch["figures"].append(m.group(1))
-                continue
-            m = TABLE_CAPTION.search(ln)
-            if m:
-                ch["tables"].append(m.group(1))
+        ln = norm_caption_line(line)
+        m = FIGURE_CAPTION.search(ln)
+        if m:
+            figures.append(m.group(1))
+            continue
+        m = TABLE_CAPTION.search(ln)
+        if m:
+            tables.append(m.group(1))
+    return figures, tables
 
 
 def _chunks_from_bounds(
@@ -124,14 +115,31 @@ def _chunks_from_bounds(
     page_map: dict[int, str],
     skip_pages: set[int],
 ) -> list[dict]:
-    """Gather → clean → enrich → sentence-normalize. chunk.py:267-276."""
-    chunks = [
-        _assemble(_gather_lines(page_map, pstart, pend, skip_pages), sec, title, pstart, pend)
-        for pstart, pend, sec, title in bounds
-    ]
-    enrich_captions(chunks)
-    for ch in chunks:
-        ch["content"] = normalize_sentences(ch["content"])
+    """Gather → clean → enrich → sentence-normalize. chunk.py:255-276.
+
+    Content and captions depend only on the page range, and ToC rows
+    that share a page share a range, so each distinct range is built
+    once.
+    """
+    built: dict[tuple[int, int], tuple[str, list[str], list[str]]] = {}
+    chunks = []
+    for pstart, pend, sec, title in bounds:
+        if (pstart, pend) not in built:
+            content = clean_content("\n".join(_gather_lines(page_map, pstart, pend, skip_pages)))
+            figures, tables = _caption_ids(content)
+            built[pstart, pend] = (normalize_sentences(content), figures, tables)
+        content, figures, tables = built[pstart, pend]
+        chunks.append(
+            {
+                "section_path": f"{sec} {title}",
+                "section_id": sec,
+                "title": title,
+                "page_range": f"{pstart},{pend}",
+                "content": content,
+                "tables": list(tables),
+                "figures": list(figures),
+            }
+        )
     return chunks
 
 

@@ -9,8 +9,9 @@ Byte-identical to the reference validator:
 
 The greedy fuzzy phase is *stateful and sequential* (earlier ToC rows
 consume chunks) — in Spark it must stay whole-document inside one
-applyInPandas group; a cross-join + row_number approximation is NOT
-order-equivalent (SURVEY J3).
+extract_document call (one row of the mapInPandas batch); a
+cross-join + row_number approximation is NOT order-equivalent
+(SURVEY J3).
 
 Fuzzy scores use difflib.SequenceMatcher.ratio, the reference's
 fallback when python-Levenshtein is absent (validate.py:86-93); this
@@ -214,7 +215,12 @@ def match_sections(
     chunk_by_id: dict[str, int] = {
         norm_id(c["section_id"]): i for i, c in enumerate(chunks) if c.get("section_id")
     }
-    chunk_titles = [(i, clean_toc_title(c.get("title") or "").lower()) for i, c in enumerate(chunks)]
+    # ToC and chunk titles overlap heavily: clean each distinct one once
+    cleaned = {
+        title: clean_toc_title(title)
+        for title in {row.get("title") or "" for row in (*toc, *chunks)}
+    }
+    chunk_titles = [(i, cleaned[c.get("title") or ""].lower()) for i, c in enumerate(chunks)]
 
     used: set[int] = set()
     matched_labels: list[str] = []
@@ -223,7 +229,7 @@ def match_sections(
 
     for t in toc:
         tid = norm_id(t["section_id"])
-        title_clean = clean_toc_title(t.get("title") or "")
+        title_clean = cleaned[t.get("title") or ""]
 
         found: int | None = None
         if prefer_section_id and tid in chunk_by_id and chunk_by_id[tid] not in used:
@@ -249,7 +255,7 @@ def match_sections(
             matched_idx.append(None)
 
     extra_labels = [
-        f"{c.get('section_id')} {clean_toc_title(c.get('title') or '')}"
+        f"{c.get('section_id')} {cleaned[c.get('title') or '']}"
         for i, c in enumerate(chunks)
         if i not in used
     ]

@@ -6,11 +6,11 @@ One call = the reference's full per-document lifecycle:
   validation   ↔ /root/reference/orchestrate.py:395-422
   metrics      ↔ metrics.pyc compute_metrics
 
-This function is the unit of work executed per url inside the Spark
-applyInPandas group (operators/extract.py) — the whole lifecycle stays
-document-local, so stages need zero extra shuffles and the reference's
-sequential semantics (greedy fuzzy match, ordered caption lists) hold
-exactly. Per-document exceptions are captured into the result status
+This function is the unit of work executed once per document row
+inside the mapInPandas batch loop of operators/extract.py — the whole
+lifecycle stays document-local, so stages need zero extra shuffles and
+the reference's sequential semantics (greedy fuzzy match, ordered
+caption lists) hold exactly. Per-document exceptions are captured into the result status
 (never raised) for parse-failure accounting per partition.
 
 Stage coupling note: chunking consumes the *validator-cleaned* ToC

@@ -16,9 +16,18 @@ The *order* of replacement steps is part of the byte-identity contract
 ligature entries are dead rows — kept for fidelity of the mapping table
 but unreachable, exactly as in the reference).
 
-All functions are plain str -> str/bool and are applied in vectorized
-batches (pd.Series.map) inside pandas UDFs; regexes compile once at
-module import (once per executor worker).
+All functions are plain str -> str/bool, called once per document
+row by core.pipeline.extract_document inside the mapInPandas batch
+loop of operators/extract.py; regexes compile once at module import
+(once per executor worker).
+
+Skipping a pass is allowed only when it provably cannot change its
+input: a pre-check that gates a regex must accept a superset of the
+strings the gated regex (or the chain it guards) can act on — same
+flags, no `\b` or other narrowing. Every input the pre-check lets
+through runs the original passes unchanged, so a skip never alters
+output (tests/test_core_fastpath.py keeps the pre-skip functions as
+oracles and pins a whole-pipeline output digest).
 """
 
 from __future__ import annotations
@@ -53,11 +62,21 @@ _ASCII_DOT_LEADERS = re.compile(r"\.{3,}")  # utils.py:84
 _CAP_ID = r"(?:(?:\d+|[A-Z])(?:\.\d+)*[a-z]?)"
 FIGURE_CAPTION = re.compile(rf"\bFigure\s+({_CAP_ID})\b", re.IGNORECASE)
 TABLE_CAPTION = re.compile(rf"\bTable\s+({_CAP_ID})\b", re.IGNORECASE)
+# superset pre-check for norm_caption_line + FIGURE/TABLE_CAPTION: no
+# normalization step creates letters, it only deletes or respaces
+# whitespace, so a line whose normalized form holds "figure"/"table"
+# already holds the letters with nothing but whitespace between them
+CAPTION_KEYWORD = re.compile(r"(?i)t\s*a\s*b\s*l\s*e|f\s*i\s*g\s*u\s*r\s*e")
 
 _TRAILING_PAGE_AFTER_LEADERS = re.compile(r"[.·•]{2,}\s*\d+\s*$")  # chunk.py:21
 _LEADER_RUN = re.compile(r"(?:\s*[.·•]\s*){3,}")  # chunk.py:25
 _LEADER_RUN_THEN_PAGE = re.compile(r"(?:\s*[.·•]\s*){2,}\s*\d+\s*$")  # chunk.py:26
 _SPACE_RUN = re.compile(r"\s{2,}")  # chunk.py:27
+# two leader glyphs with only whitespace between: both leader passes
+# need this, so a text or line without it skips them
+_LEADER_PAIR = re.compile(r"[.·•]\s*[.·•]")
+# _SPACE_RUN that never crosses a line break, for one whole-text pass
+_INLINE_SPACE_RUN = re.compile(r"[^\S\n]{2,}")
 
 # de-spaced caption keywords:  "T a b l e" -> "Table"  (chunk.py:78-79)
 _SPACED_TABLE = re.compile(r"(?i)\bT\s*a\s*b\s*l\s*e\b")
@@ -109,10 +128,11 @@ def normalize_text(s: str) -> str:
     """
     if not s:
         return ""
-    s = _NBSP.sub(" ", s)
-    s = _DASHES.sub("-", s)
-    for src, dst in _LIGATURE_FOLD:
-        s = s.replace(src, dst)
+    if not s.isascii():  # every NBSP/dash/ligature source is non-ASCII
+        s = _NBSP.sub(" ", s)
+        s = _DASHES.sub("-", s)
+        for src, dst in _LIGATURE_FOLD:
+            s = s.replace(src, dst)
     s = _HSPACE_RUN.sub(" ", s)
     return s.strip()
 
@@ -156,19 +176,25 @@ def clean_content(text: str) -> str:
     text = _HYPHEN_WRAP_LOWER.sub(r"\1\2", text)
     text = _DASH_WRAP_ANY.sub(r"\1 \2", text)
     text = text.replace('\\"', '"').replace("\\'", "'")
-    text = _LONE_SLASH.sub("", text)
+    if "/" in text:
+        text = _LONE_SLASH.sub("", text)
     text = _CAMEL_BOUNDARY.sub(r"\1 \2", text)
-    text = _QUOTED_SPAN.sub(r' "\1" ', text)
+    if '"' in text:
+        text = _QUOTED_SPAN.sub(r' "\1" ', text)
 
-    kept: list[str] = []
-    for line in text.splitlines():
-        ln = line.rstrip()
-        ln = _LEADER_RUN_THEN_PAGE.sub("", ln)
-        ln = _LEADER_RUN.sub(" ", ln)
-        ln = _SPACE_RUN.sub(" ", ln).strip()
-        if ln:
-            kept.append(ln)
-    return "\n".join(kept).strip()
+    lines = text.splitlines()
+    if _LEADER_PAIR.search(text):
+        lines = [
+            _LEADER_RUN.sub(" ", _LEADER_RUN_THEN_PAGE.sub("", ln.rstrip()))
+            if _LEADER_PAIR.search(ln)
+            else ln
+            for ln in lines
+        ]
+    # the per-line space-run pass, done once over the whole text: after
+    # the join "\n" is the only line boundary (splitlines consumed \r,
+    # \x0b, \x0c, \x1c-\x1e, \x85, \u2028, \u2029)
+    text = _INLINE_SPACE_RUN.sub(" ", "\n".join(lines))
+    return "\n".join(ln for line in text.split("\n") if (ln := line.strip()))
 
 
 def clean_heading_title(title: str) -> str:
